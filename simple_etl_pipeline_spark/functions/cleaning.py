@@ -101,6 +101,14 @@ def clean_gender_col(c: Column | str) -> Column:
     return _strip_prefix(_col(c), "Gender")
 
 
+def dirty_column_predicate(name: str) -> Column:
+    """True where column ``name`` fails its F1 rule: NULL or one of its
+    DIRTY_PATTERNS sentinels. dirty_row_predicate keeps a row iff this
+    is false for every listed column."""
+    col = F.col(name)
+    return col.isNull() | col.isin(DIRTY_PATTERNS[name])
+
+
 def dirty_row_predicate(columns: list[str] | None = None) -> Column:
     """Conjunctive keep-predicate for F1 dirty-row removal
     (reference utils/transform.py:108-121): keep a row iff every listed

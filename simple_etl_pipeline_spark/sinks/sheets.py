@@ -33,7 +33,7 @@ def save_to_google_sheets(
 ) -> str:
     """Write df to a worksheet; returns the spreadsheet URL."""
     if df.isEmpty():
-        raise sinks.LoadError("cannot save empty DataFrame to Google Sheets")
+        raise sinks.EmptyOutputError("cannot save empty DataFrame to Google Sheets")
 
     if client_factory is None:
         try:

@@ -18,14 +18,16 @@ from pyspark.sql.streaming import StreamingQuery
 def stream_to_csv_batches(stream: DataFrame, output_path: str) -> StreamingQuery:
     """Write each micro-batch as out batch_<id>.csv under output_path;
     runs with availableNow (drain-and-stop)."""
+    from simple_etl_pipeline_spark.sinks import EmptyOutputError
     from simple_etl_pipeline_spark.sinks.csv import save_to_csv
 
     os.makedirs(output_path, exist_ok=True)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        save_to_csv(batch_df, output_path, filename=f"batch_{batch_id}.csv")
+        try:
+            save_to_csv(batch_df, output_path, filename=f"batch_{batch_id}.csv")
+        except EmptyOutputError:
+            pass  # an empty micro-batch writes no file
 
     return (
         stream.writeStream.foreachBatch(write_batch)
