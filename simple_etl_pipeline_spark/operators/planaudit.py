@@ -234,7 +234,8 @@ def scalar_bnlj_violations(plan: str) -> list[str]:
     :func:`plan_fingerprint`: when the session's cache manager splices
     an EXECUTED persisted frame into the plan, the InMemoryRelation
     re-prints that cache's AdaptiveSparkPlan with ``== Final Plan ==``
-    / ``== Initial Plan ==`` sections whose indentation RESTARTS at an
+    / ``== Initial Plan ==`` sections (``== Current Plan ==`` while
+    that plan is not finalized) whose indentation RESTARTS at an
     unrelated column (and nested splices interleave), so the tree-art
     containment arithmetic below stops meaning parent/child from the
     first such marker on (r16 find: a suite-ordering cache hit turned
@@ -244,7 +245,9 @@ def scalar_bnlj_violations(plan: str) -> list[str]:
     splice's provenance plan (audited when the fresh build that
     created the cache was audited; a cache hit never re-executes it)
     or outer nodes whose child columns are no longer trustworthy.
-    Fresh plans contain no such markers and keep full coverage."""
+    A plan whose every BNLJ lies out of scope gets one "plan out of
+    audit scope" message instead of an all-clear. Fresh plans contain
+    no such markers and keep full coverage."""
     import re
 
     nodes = _summary_nodes(plan)
@@ -260,7 +263,7 @@ def scalar_bnlj_violations(plan: str) -> list[str]:
             continue
         if not ln.strip():
             break
-        if re.match(r"^[\s:+\-]*== (?:Final|Initial) Plan ==\s*$", ln):
+        if re.match(r"^[\s:+\-]*== (?:Final|Initial|Current) Plan ==\s*$", ln):
             n_reliable = _cnt
             break
         if re.search(r"\((\d+)\)(?:, Statistics\(.*\))?\s*$", ln):
@@ -395,25 +398,33 @@ def scalar_bnlj_violations(plan: str) -> list[str]:
             cur = kids[0]
 
     seen: set[int] = set()
+    audited = 0
     for i, (_col, name, nid) in enumerate(nodes):
         if not name.startswith("BroadcastNestedLoopJoin") or nid in seen:
             continue
+        seen.add(nid)
         if i >= n_reliable:
             continue  # inside an executed-cache splice — see docstring
-        seen.add(nid)
         crosses_cut = i + len(subtree(i)) + 1 > n_reliable
         kids = direct_children(i)
         if len(kids) != 2:
             if crosses_cut:
                 continue  # child columns corrupted by the splice
             out.append(f"BNLJ ({nid}): expected 2 children, saw {len(kids)}")
+            audited += 1
             continue
         build = kids[1] if "BuildRight" in name else kids[0]
         why = check_build(build)
         if why is not None and crosses_cut:
             continue  # descent entered the spliced region
+        audited += 1
         if why is not None:
             out.append(f"BNLJ ({nid}) build side not scalar-bounded: {why}")
+    if seen and not audited:
+        return [
+            f"plan out of audit scope: all {len(seen)} BNLJ node(s) sit in "
+            "executed AQE sections; audit a fresh build"
+        ]
     return out
 
 

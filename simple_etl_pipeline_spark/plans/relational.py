@@ -2052,8 +2052,8 @@ def global_row_number(
          cannot satisfy that window's ClusteredDistribution(_gpid), so
          EVERY consumer of the ranked frame re-paid a corpus-sized
          hashpartitioning(_gpid) Exchange + Sort + Window above the
-         cache (ev_mad_outliers ran five such passes; plan audit
-         plans/r15/ev_mad_outliers_*). Now there is no Window node and
+         cache (ev_mad_outliers ran five such passes, as its
+         formatted plan showed). Now there is no Window node and
          no second exchange at all;
       3. per-partition counts -> cumulative offsets. The counts frame
          is |partitions| rows of METADATA; its running-sum window is

@@ -1109,6 +1109,13 @@ FROM wins WHERE len(fps) > 0 ORDER BY doc_id
 CC_MAX_ITERS = 16
 
 
+def _drop_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint`` frame nothing reads any
+    more. Not ``DataFrame.unpersist``: that re-caches the frames that
+    depend on it, which replays their lineage."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def connected_components(edges: DataFrame, max_iters: int = CC_MAX_ITERS) -> DataFrame:
     """Connected components by large-star/small-star edge contraction
     (Kiveris et al. 2014, "Connected Components in MapReduce and
@@ -1140,9 +1147,11 @@ def connected_components(edges: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
     round-trips are pure overhead at any scale). The checkpoint is
     LAZY: the round's single convergence count materializes it as a
     side effect. Lineage is still truncated per round with
-    localCheckpoint so round N does not replay rounds 1..N-1. Raises
-    instead of returning silently-unconverged labels if max_iters is
-    hit.
+    localCheckpoint so round N does not replay rounds 1..N-1, and once
+    round N's count has materialized its checkpoint, round N-1's is
+    freed: a call leaves one checkpoint behind, the final one the
+    returned frame reads. Raises instead of returning
+    silently-unconverged labels if max_iters is hit.
 
     `edges` must be symmetric (both (a,b) and (b,a) present) with
     columns (src, dst).
@@ -1187,19 +1196,18 @@ def connected_components(edges: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
             .select(F.col("a").alias("src"), F.col("b").alias("dst"))
             .localCheckpoint(eager=False)
         )
-        cur = nxt
         # star forest iff every src has exactly one edge AND no node is
         # on both sides; ONE combined count job over the (lazily)
         # checkpointed edges — the count also materializes the round's
         # checkpoint, so each round is a single driver barrier
         violations = (
-            cur.select(
+            nxt.select(
                 F.col("src").alias("n"),
                 F.lit(1).alias("s"),
                 F.lit(0).alias("d"),
             )
             .unionByName(
-                cur.select(
+                nxt.select(
                     F.col("dst").alias("n"),
                     F.lit(0).alias("s"),
                     F.lit(1).alias("d"),
@@ -1212,6 +1220,10 @@ def connected_components(edges: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
             )
             .count()
         )
+        # nxt is materialized and reads nothing upstream: the previous
+        # round's checkpoint is dead
+        _drop_checkpoint(cur)
+        cur = nxt
         if violations == 0:
             leaves = cur.select(
                 F.col("src").alias("doc_id"),
@@ -1223,6 +1235,7 @@ def connected_components(edges: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
                 .withColumn("component", F.col("doc_id"))
             )
             return leaves.unionByName(roots)
+    _drop_checkpoint(cur)
     raise RuntimeError(
         f"connected_components: no convergence in {max_iters} rounds -- "
         "component diameter exceeds the halving bound; raise max_iters"
@@ -2383,6 +2396,7 @@ def txt_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     edges_deg = edges.join(deg, "src").localCheckpoint()
+    _drop_checkpoint(edges)  # edges_deg is materialized: nothing reads it
     verts = edges_deg.select(F.col("src").alias("doc_id")).distinct()
     nn = F.broadcast(verts.agg(F.count(F.lit(1)).alias("n")))
     r = verts.crossJoin(nn).select(

@@ -55,3 +55,15 @@ def test_nonconvergence_raises(spark):
 
 def test_default_cap_is_generous():
     assert CC_MAX_ITERS >= 16
+
+
+def test_call_keeps_only_the_final_checkpoint(spark):
+    # each round frees the previous round's localCheckpoint once its own
+    # has materialized; the returned frame reads only the last one
+    jsc = spark.sparkContext._jsc
+    n = 300
+    edges = _sym_edges(spark, [(i, i + 1) for i in range(n - 1)])
+    before = jsc.getPersistentRDDs().size()
+    labels = _labels(connected_components(edges, max_iters=10))
+    assert labels == {i: 0 for i in range(n)}
+    assert jsc.getPersistentRDDs().size() - before <= 1

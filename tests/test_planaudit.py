@@ -239,10 +239,50 @@ def test_scalar_bnlj_audit_skips_executed_cache_splices():
         scalar_bnlj_violations,
     )
 
-    # spliced BNLJ (34) is out of scope; clean pre-marker BNLJ passes
-    assert scalar_bnlj_violations(_spliced_plan("Keys: []")) == []
+    # a cached plan AQE has not finalized prints '== Current Plan =='
+    # in place of '== Final Plan ==': the same splice, the same cut
+    for marker in ("== Final Plan ==", "== Current Plan =="):
 
-    # pre-marker rigor retained: the keyed aggregate is still flagged,
-    # and ONLY it — no phantom finding for the spliced node
-    v = scalar_bnlj_violations(_spliced_plan("Keys [1]: [user_id#5L]"))
-    assert len(v) == 1 and "(9)" in v[0] and "keyed aggregate" in v[0], v
+        def spliced(keys: str) -> str:
+            return _spliced_plan(keys).replace("== Final Plan ==", marker)
+
+        # spliced BNLJ (34) is out of scope; clean pre-marker BNLJ passes
+        assert scalar_bnlj_violations(spliced("Keys: []")) == [], marker
+
+        # pre-marker rigor retained: the keyed aggregate is still flagged,
+        # and ONLY it — no phantom finding for the spliced node
+        v = scalar_bnlj_violations(spliced("Keys [1]: [user_id#5L]"))
+        assert len(v) == 1 and "(9)" in v[0] and "keyed aggregate" in v[0], (
+            marker,
+            v,
+        )
+
+
+def test_scalar_bnlj_audit_reports_plan_with_nothing_in_scope():
+    """When every BNLJ of a plan sits inside an executed-cache splice,
+    nothing was audited: the result says so instead of an all-clear."""
+    from simple_etl_pipeline_spark.operators.planaudit import (
+        scalar_bnlj_violations,
+    )
+
+    plan = (
+        "== Physical Plan ==\n"
+        "AdaptiveSparkPlan (40)\n"
+        "+- BroadcastHashJoin Inner BuildRight (39)\n"
+        "   :- Scan parquet  (1)\n"
+        "   +- BroadcastExchange (38)\n"
+        "      +- Filter (37)\n"
+        "         +- InMemoryTableScan (11)\n"
+        "               +- InMemoryRelation (12)\n"
+        "                     +- AdaptiveSparkPlan (36)\n"
+        "                        +- == Final Plan ==\n"
+        "                           ResultQueryStage (35)\n"
+        "                           +- * BroadcastNestedLoopJoin Cross"
+        " BuildRight (34)\n"
+        "                              :- Scan parquet  (30)\n"
+        "      +- == Initial Plan ==\n"
+        "         HashAggregate (33)\n"
+        "         +- Scan parquet  (30)\n"
+    )
+    v = scalar_bnlj_violations(plan)
+    assert len(v) == 1 and "out of audit scope" in v[0], v
