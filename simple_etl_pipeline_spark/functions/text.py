@@ -30,47 +30,14 @@ def _strip_ws(c: Column) -> Column:
     return F.regexp_replace(c, _WS_STRIP, "")
 
 
-# --- constant-expression memos (r16; the sim_rp_recall _rp_project
-# device, VERDICT r15 #6): tokens_col("text") / shingles_col("text")
-# are COMPILE-TIME CONSTANTS over the canonical column name, yet were
-# rebuilt through py4j on every plan construction (~12 / ~37 ms per
-# call, dozens of calls per bench pass across the text family). A
-# Column is an immutable, session- and data-free expression tree, so
-# module-level reuse equals writing the expression twice — NOT a
-# result or plan memo keyed on any data directory. Non-canonical
-# inputs always build fresh. sameResult pinned by
-# tests/test_plan_shapes.py::test_text_constant_memos_plan_identical.
-_TOKENS_TEXT_MEMO: Column | None = None
-_SHINGLES_TEXT_MEMO: dict[int, Column] = {}
-_CANONICAL_TEXT_STR: str | None = None
-
-
-def _is_canonical_text(c: Column | str) -> bool:
-    if isinstance(c, str):
-        return c == "text"
-    # derive the canonical repr once (F.col needs the live gateway,
-    # so this cannot be a module-import-time constant)
-    global _CANONICAL_TEXT_STR
-    if _CANONICAL_TEXT_STR is None:
-        _CANONICAL_TEXT_STR = str(F.col("text"))
-    return str(c) == _CANONICAL_TEXT_STR
-
-
 def tokens_col(c: Column | str) -> Column:
     """Whitespace tokenization; empty/blank text -> empty array (split of
     '' yields [''], which would count as one token)."""
-    global _TOKENS_TEXT_MEMO
-    canonical = _is_canonical_text(c)
-    if canonical and _TOKENS_TEXT_MEMO is not None:
-        return _TOKENS_TEXT_MEMO
     c = F.col(c) if isinstance(c, str) else c
     t = _strip_ws(c)
-    built = F.when(t == "", F.array().cast("array<string>")).otherwise(
+    return F.when(t == "", F.array().cast("array<string>")).otherwise(
         F.split(t, _WS_CLASS + "+")
     )
-    if canonical:
-        _TOKENS_TEXT_MEMO = built
-    return built
 
 
 def token_count_col(c: Column | str) -> Column:
@@ -98,11 +65,7 @@ def shingles_col(c: Column | str, n: int = 3) -> Column:
     """Word n-gram shingles as an array<string>; fewer than n tokens ->
     empty. DuckDB twin: list_transform(generate_series(1, len-n+1),
     i -> array_to_string(toks[i:i+n-1], ' ')). Token array bound once
-    (see bind_once) — not re-split per shingle. Memoized per n for the
-    canonical "text" input (see the memo note above)."""
-    canonical = _is_canonical_text(c)
-    if canonical and n in _SHINGLES_TEXT_MEMO:
-        return _SHINGLES_TEXT_MEMO[n]
+    (see bind_once) — not re-split per shingle."""
 
     def _build(tarr: Column) -> Column:
         return F.when(
@@ -114,10 +77,7 @@ def shingles_col(c: Column | str, n: int = 3) -> Column:
             )
         )
 
-    built = bind_once(tokens_col(c), _build)
-    if canonical:
-        _SHINGLES_TEXT_MEMO[n] = built
-    return built
+    return bind_once(tokens_col(c), _build)
 
 
 def md5_hash60(c: Column | str, salt: Column | str | None = None) -> Column:

@@ -366,7 +366,9 @@ def scalar_bnlj_violations(plan: str) -> list[str]:
                     if m
                     else None
                 )
-                for j, (_c, n2, id2) in enumerate(nodes):
+                # only pre-splice exchanges: a spliced one's subtree
+                # columns are meaningless, so it proves no bound
+                for j, (_c, n2, id2) in enumerate(nodes[:n_reliable]):
                     if j == cur or n2.split(" ")[0] not in (
                         "BroadcastExchange",
                         "Exchange",
@@ -405,7 +407,11 @@ def scalar_bnlj_violations(plan: str) -> list[str]:
         seen.add(nid)
         if i >= n_reliable:
             continue  # inside an executed-cache splice — see docstring
-        crosses_cut = i + len(subtree(i)) + 1 > n_reliable
+        # A subtree that ends exactly at the cut is indistinguishable
+        # from one the splice truncated (its indentation restarted at or
+        # left of this node's column): treat it as crossing too.
+        end = i + len(subtree(i)) + 1
+        crosses_cut = end > n_reliable or end == n_reliable < len(nodes)
         kids = direct_children(i)
         if len(kids) != 2:
             if crosses_cut:

@@ -337,31 +337,17 @@ COSINE_DUP_THRESHOLD = 0.999
 # components still elect the base vector.
 DUP_INJECT_OFFSET = 1 << 40
 
-# Constant-expression memo for the scaled-copy variant array (r16; the
-# plans.text._dup_variants_col device).
-_SCALED_DUP_VARIANTS_COL = None
-
-
-def _scaled_dup_variants_col():
-    global _SCALED_DUP_VARIANTS_COL
-    if _SCALED_DUP_VARIANTS_COL is None:
-        base = F.struct(
-            F.col("vec_id").alias("vec_id"), F.col("v").alias("v")
-        )
-        dup = F.struct(
-            (F.col("vec_id") + DUP_INJECT_OFFSET).alias("vec_id"),
-            F.transform("v", lambda x: x * 1.5).alias("v"),
-        )
-        empty = F.array().cast(
-            "array<struct<vec_id:bigint,v:array<double>>>"
-        )
-        _SCALED_DUP_VARIANTS_COL = F.concat(
-            F.array(base),
-            F.when(F.col("vec_id") % 11 == 0, F.array(dup)).otherwise(
-                empty
-            ),
-        )
-    return _SCALED_DUP_VARIANTS_COL
+def _scaled_dup_variants_col() -> F.Column:
+    base = F.struct(F.col("vec_id").alias("vec_id"), F.col("v").alias("v"))
+    dup = F.struct(
+        (F.col("vec_id") + DUP_INJECT_OFFSET).alias("vec_id"),
+        F.transform("v", lambda x: x * 1.5).alias("v"),
+    )
+    empty = F.array().cast("array<struct<vec_id:bigint,v:array<double>>>")
+    return F.concat(
+        F.array(base),
+        F.when(F.col("vec_id") % 11 == 0, F.array(dup)).otherwise(empty),
+    )
 
 
 def _with_scaled_dups(emb: DataFrame) -> DataFrame:

@@ -44,36 +44,24 @@ from simple_etl_pipeline_spark.schemas import load_table
 NEAR_DUP_TAIL = " nearly duplicated tail token"
 
 
-# Constant-expression memo for the dup-variant array (r16; see the
-# minhash memo note below for the device and its safety argument).
-_DUP_VARIANTS_COL = None
-
-
-def _dup_variants_col():
-    global _DUP_VARIANTS_COL
-    if _DUP_VARIANTS_COL is None:
-        base = F.struct(
-            F.col("doc_id").alias("doc_id"), F.col("text").alias("text")
-        )
-        exact = F.struct(
-            (F.col("doc_id") + 1000000).alias("doc_id"),
-            F.col("text").alias("text"),
-        )
-        near = F.struct(
-            (F.col("doc_id") + 2000000).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(NEAR_DUP_TAIL)).alias("text"),
-        )
-        empty = F.array().cast("array<struct<doc_id:bigint,text:string>>")
-        _DUP_VARIANTS_COL = F.concat(
-            F.array(base),
-            F.when(F.col("doc_id") % 17 == 0, F.array(exact)).otherwise(
-                empty
-            ),
-            F.when(F.col("doc_id") % 23 == 0, F.array(near)).otherwise(
-                empty
-            ),
-        )
-    return _DUP_VARIANTS_COL
+def _dup_variants_col() -> Column:
+    base = F.struct(
+        F.col("doc_id").alias("doc_id"), F.col("text").alias("text")
+    )
+    exact = F.struct(
+        (F.col("doc_id") + 1000000).alias("doc_id"),
+        F.col("text").alias("text"),
+    )
+    near = F.struct(
+        (F.col("doc_id") + 2000000).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(NEAR_DUP_TAIL)).alias("text"),
+    )
+    empty = F.array().cast("array<struct<doc_id:bigint,text:string>>")
+    return F.concat(
+        F.array(base),
+        F.when(F.col("doc_id") % 17 == 0, F.array(exact)).otherwise(empty),
+        F.when(F.col("doc_id") % 23 == 0, F.array(near)).otherwise(empty),
+    )
 
 
 def inject_dup_variants(docs: DataFrame) -> DataFrame:

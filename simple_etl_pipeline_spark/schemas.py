@@ -142,23 +142,18 @@ TABLE_SCHEMAS: dict[str, T.StructType] = {
 # Small dimensions that should always be broadcast in joins.
 BROADCAST_TABLES = {"region", "nation", "supplier", "part", "customer"}
 
-# Per-sf_dir cache of the events.ts physical unit. A single driver-side
-# footer read (pyarrow, no Spark job) — testdata generations have flipped
-# between TIMESTAMP(NANOS) and TIMESTAMP(MICROS), and misreading the unit
-# silently shifts every epoch by 1000x.
-_EVENTS_TS_NANOS_CACHE: dict[str, bool] = {}
-
 
 def _events_ts_is_nanos(sf_dir: str) -> bool:
-    cached = _EVENTS_TS_NANOS_CACHE.get(sf_dir)
-    if cached is None:
-        import pyarrow.dataset as ds
+    """Whether events.ts is stored as TIMESTAMP(NANOS). Testdata
+    generations have flipped between NANOS and MICROS, and misreading
+    the unit shifts every epoch by 1000x. One driver-side pyarrow footer
+    read per call (no Spark job, ~0.1 ms), never cached: a directory
+    can be rewritten in place with the other unit."""
+    import pyarrow.dataset as ds
 
-        # dataset() resolves both single-file and Spark directory layouts.
-        schema = ds.dataset(f"{sf_dir}/events.parquet", format="parquet").schema
-        cached = getattr(schema.field("ts").type, "unit", None) == "ns"
-        _EVENTS_TS_NANOS_CACHE[sf_dir] = cached
-    return cached
+    # dataset() resolves both single-file and Spark directory layouts.
+    schema = ds.dataset(f"{sf_dir}/events.parquet", format="parquet").schema
+    return getattr(schema.field("ts").type, "unit", None) == "ns"
 
 
 # --- size-conditional scan parallelization (r15, guide §2.5/§6) ----------
@@ -170,10 +165,10 @@ def _events_ts_is_nanos(sf_dir: str) -> bool:
 # lands in one split, the rest read zero rows). The honest fix is the
 # guide's input-skew remedy: repartition immediately after the read —
 # but ONLY when the table is small enough that its scan cannot feed the
-# cluster's map parallelism anyway. The bounds are parameterised:
-#   * below MIN (default 32 KB) the table's map work is trivial and the
+# cluster's map parallelism anyway. The bounds:
+#   * below MIN (32 KB) the table's map work is trivial and the
 #     exchange would be pure overhead (region/nation/supplier class);
-#   * at/above MAX (default 256 MB) a real deployment's table has
+#   * at/above MAX (256 MB) a real deployment's table has
 #     enough native splits that the repartition would be a pointless
 #     full shuffle — at 100 TB this branch NEVER fires, so the
 #     production plan shape is unchanged;
@@ -187,7 +182,7 @@ def _events_ts_is_nanos(sf_dir: str) -> bool:
 #     the map work it parallelizes (q1 0.40 -> 0.52 s, agg_basket_lift
 #     ~flat-to-worse), so they keep their plain scans. EVENTS was in
 #     the set through most of r15 and is now OUT on the same evidence
-#     (session-3 interleaved A/B, tools/scan_repart_ab.py): its per-row
+#     (interleaved A/B, 3 configs x 13 queries rotated): its per-row
 #     work is timestamp/window arithmetic — relational-class, not
 #     fold-class — and the repartition exchange lost on EVERY probed
 #     events consumer, including the heavy ones (ev_tumbling_hourly
@@ -202,14 +197,8 @@ def _events_ts_is_nanos(sf_dir: str) -> bool:
 # partition-dependent: no rand(), global ranks go through the
 # range-shuffle barrier (operators/relational.global_row_number), and
 # every collect_list is sort-normalized (the _ordered_vals discipline).
-SMALL_SCAN_MIN_BYTES = int(
-    __import__("os").environ.get("SPARK_GRAFT_SMALL_SCAN_MIN_BYTES", 32 << 10)
-)
-SMALL_SCAN_MAX_BYTES = int(
-    __import__("os").environ.get(
-        "SPARK_GRAFT_SMALL_SCAN_MAX_BYTES", 256 << 20
-    )
-)
+SMALL_SCAN_MIN_BYTES = 32 << 10
+SMALL_SCAN_MAX_BYTES = 256 << 20
 PARALLELIZE_SCAN_TABLES = frozenset({"documents", "embeddings"})
 
 
@@ -238,8 +227,8 @@ def _parallelize_small_scan(
     doc_id-only projection, a single exploded aggregation whose
     shuffle re-spreads the rows anyway) pay the exchange without
     fold work to parallelize. Those call load_table(...,
-    parallelize=False); the r16 interleaved cold A/B
-    (tools/docrep_ab_r16.py, 5 reps, clearCache per rep):
+    parallelize=False); the r16 interleaved cold A/B (5 reps,
+    clearCache per rep):
       txt_kl_drift        0.793 -> 0.664 s median without the exchange
       txt_domain_split    0.293 -> 0.261
       txt_doc_features    0.232 -> 0.200

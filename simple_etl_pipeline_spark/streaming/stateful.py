@@ -837,103 +837,6 @@ FROM buckets GROUP BY band ORDER BY band
 ST_DEDUP_LSH_ORACLE = _st_dedup_lsh_oracle()
 
 
-def user_totals_tws(stream: DataFrame) -> DataFrame:
-    """Same per-user running totals via transformWithStateInPandas —
-    Spark 4's successor API to applyInPandasWithState: typed state
-    handles (ValueState here; ListState/MapState/timers available),
-    explicit processor lifecycle, RocksDB-backed. Output contract is
-    identical to user_totals_stateful, so the two APIs are
-    differential-tested against each other through the same oracle."""
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class _UserTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import itertools
-            import math
-
-            import pandas as pd
-
-            (user_id,) = key
-            prev = self._state.get() if self._state.exists() else None
-            n, s = prev if prev is not None else (0, 0.0)
-            # one fsum + one += per batch, chunk-boundary-independent
-            # (same accumulation contract as user_totals_stateful)
-            chunks = [pdf["value"].to_numpy() for pdf in rows]
-            n += sum(len(c) for c in chunks)
-            s += math.fsum(itertools.chain.from_iterable(chunks))
-            self._state.update((n, s))
-            yield pd.DataFrame(
-                {"user_id": [user_id], "n_events": [n], "sum_value": [s]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_UserTotals(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas talks to its state server over
-    protobuf; environments without a working google.protobuf (this
-    container's is broken) cannot run it. The query registers only when
-    the dependency probe passes, so the rest of the engine is
-    unaffected — the applyInPandasWithState twin above covers the same
-    semantics everywhere."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def st_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """queries() adapter for the transformWithState twin. Requires the
-    RocksDB state store provider (a transformWithState precondition);
-    the previous provider conf is restored after the run so the other
-    streaming queries keep their default."""
-    from simple_etl_pipeline_spark.streaming.events import (
-        _run_to_memory,
-        read_events_stream,
-    )
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_events_stream(spark, sf_dir)
-        out = _run_to_memory(user_totals_tws(stream), "update")
-        result = (
-            out.groupBy("user_id")
-            .agg(
-                F.max("n_events").alias("n_events"),
-                F.round(F.max("sum_value"), 4).alias("sum_value"),
-            )
-            .orderBy("user_id")
-        )
-        # materialize before the provider conf flips back (the memory
-        # sink table is already computed; this is just a defensive copy
-        # of the tiny result)
-        return result
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
 QUERIES: dict[str, Any] = {
     "st_user_totals_stateful": st_user_totals_stateful,
     # round-13 registration (r13 bank, built round 12 with its full
@@ -954,6 +857,3 @@ ORACLES = {
 }
 TAIL_QUERIES: dict[str, Any] = {"st_scd2_users": st_scd2_users}
 TAIL_ORACLES = {"st_scd2_users": ST_SCD2_ORACLE}
-if tws_available():  # see tws_available docstring — env-gated feature
-    QUERIES["st_user_totals_tws"] = st_user_totals_tws
-    ORACLES["st_user_totals_tws"] = ST_USER_TOTALS_ORACLE

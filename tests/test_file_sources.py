@@ -138,3 +138,42 @@ def test_read_binary_files(spark, tmp_path):
     assert rows == {"a.bin": b"\x00\x01\x02", "b.bin": b"hello"}
     cols = set(df.columns)
     assert {"path", "modificationTime", "length", "content"} <= cols
+
+
+def test_events_ts_unit_is_read_from_the_current_file(spark, tmp_path):
+    """load_table reads events.ts by the unit the file holds NOW: a
+    directory rewritten in place from TIMESTAMP(NANOS) to
+    TIMESTAMP(MICROS) must not be read with the old unit (that shifts
+    every epoch by 1000x, or fails the read)."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from simple_etl_pipeline_spark.schemas import load_table
+
+    ts = [dt.datetime(2024, 1, 1, 0, 0, 1), dt.datetime(2024, 3, 5, 12, 30)]
+    path = tmp_path / "events.parquet"
+    for unit in ("ns", "us"):
+        pq.write_table(
+            pa.table(
+                {
+                    "event_id": pa.array([1, 2], pa.int64()),
+                    "ts": pa.array(ts, pa.timestamp(unit)),
+                    "user_id": pa.array([7, 8], pa.int64()),
+                    "event_type": ["view", "buy"],
+                    "value": [1.0, 2.0],
+                    "props": ["{}", "{}"],
+                }
+            ),
+            path,
+        )
+        back = load_table(spark, str(tmp_path), "events", parallelize=False)
+        # compared as UTC text, so the driver's local zone cannot shift it
+        got = sorted(
+            r[0]
+            for r in back.select(
+                F.date_format("ts", "yyyy-MM-dd HH:mm:ss")
+            ).collect()
+        )
+        assert got == [t.strftime("%Y-%m-%d %H:%M:%S") for t in ts], unit

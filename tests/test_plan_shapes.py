@@ -269,39 +269,24 @@ def test_rp_project_memo_is_plan_identical(spark, sf_dir):
 
 
 def test_text_constant_memos_plan_identical(spark, sf_dir):
-    """The r16 construction memos of the constant text expressions
-    (tokens_col/shingles_col on the canonical "text" input, the K
-    affine min-hash aggregates, the band-key structs and their
+    """The r16 construction memos of the constant min-hash expressions
+    (the K affine min-hash aggregates, the band-key structs and their
     stateless twins) must be invisible to the plan: memo hits return
-    the identical objects, non-canonical inputs build fresh, and a
-    query built from the memos analyzes to the same plan as one built
-    from scratch — the memos can never change what a query computes."""
-    import pyspark.sql.functions as F
-
-    from simple_etl_pipeline_spark.functions import text as ftext
+    the identical objects, and a query built from the memos analyzes
+    to the same plan as one built from scratch — the memos can never
+    change what a query computes."""
     from simple_etl_pipeline_spark.plans import text as txtmod
 
-    # memo hits are identical objects; non-canonical inputs are fresh
-    assert ftext.tokens_col("text") is ftext.tokens_col("text")
-    assert ftext.tokens_col("other") is not ftext.tokens_col("text")
-    assert ftext.shingles_col("text") is ftext.shingles_col("text")
-    assert ftext.shingles_col("text", 2) is ftext.shingles_col("text", 2)
-    assert ftext.shingles_col("text", 2) is not ftext.shingles_col("text")
-    assert ftext.shingles_col(F.col("o")) is not ftext.shingles_col("text")
     assert txtmod._mh_agg_cols() is txtmod._mh_agg_cols()
     assert txtmod._band_struct_cols() is txtmod._band_struct_cols()
 
     def _reset():
         saved = (
-            ftext._TOKENS_TEXT_MEMO,
-            dict(ftext._SHINGLES_TEXT_MEMO),
             txtmod._MH_AGG_COLS,
             txtmod._BAND_STRUCT_COLS,
             txtmod._MH_STATELESS_COLS,
             txtmod._BAND_STRUCT_BIGINT_COLS,
         )
-        ftext._TOKENS_TEXT_MEMO = None
-        ftext._SHINGLES_TEXT_MEMO.clear()
         txtmod._MH_AGG_COLS = None
         txtmod._BAND_STRUCT_COLS = None
         txtmod._MH_STATELESS_COLS = None
@@ -309,13 +294,12 @@ def test_text_constant_memos_plan_identical(spark, sf_dir):
         return saved
 
     def _restore(saved):
-        ftext._TOKENS_TEXT_MEMO = saved[0]
-        ftext._SHINGLES_TEXT_MEMO.clear()
-        ftext._SHINGLES_TEXT_MEMO.update(saved[1])
-        txtmod._MH_AGG_COLS = saved[2]
-        txtmod._BAND_STRUCT_COLS = saved[3]
-        txtmod._MH_STATELESS_COLS = saved[4]
-        txtmod._BAND_STRUCT_BIGINT_COLS = saved[5]
+        (
+            txtmod._MH_AGG_COLS,
+            txtmod._BAND_STRUCT_COLS,
+            txtmod._MH_STATELESS_COLS,
+            txtmod._BAND_STRUCT_BIGINT_COLS,
+        ) = saved
 
     from simple_etl_pipeline_spark.schemas import load_table
 

@@ -286,3 +286,95 @@ def test_scalar_bnlj_audit_reports_plan_with_nothing_in_scope():
     )
     v = scalar_bnlj_violations(plan)
     assert len(v) == 1 and "out of audit scope" in v[0], v
+
+
+def _splice_inside_bnlj_plan(agg_keys_line: str) -> str:
+    """A pre-marker BNLJ (37) whose FIRST child holds the
+    executed-cache splice: the splice restarts the tree art at a column
+    left of the BNLJ, so the BNLJ's parsed subtree stops exactly at the
+    cut and its second child (33), printed after the splice, no longer
+    reads as its child. The clean BNLJ (9) ends well before the cut."""
+    return (
+        "== Physical Plan ==\n"
+        "AdaptiveSparkPlan (40)\n"
+        "+- BroadcastHashJoin Inner BuildRight (39)\n"
+        "   :- Project (10)\n"
+        "   :  +- * BroadcastNestedLoopJoin Cross BuildRight (9)\n"
+        "   :     :- Scan parquet  (1)\n"
+        "   :     +- BroadcastExchange (8)\n"
+        "   :        +- HashAggregate (7)\n"
+        "   :           +- Exchange (6)\n"
+        "   :              +- HashAggregate (5)\n"
+        "   :                 +- Scan parquet  (4)\n"
+        "   +- BroadcastExchange (38)\n"
+        "      +- BroadcastNestedLoopJoin Cross BuildRight (37)\n"
+        "         :- InMemoryTableScan (11)\n"
+        "         :     +- InMemoryRelation (12)\n"
+        "         :           +- AdaptiveSparkPlan (36)\n"
+        "         :              +- == Final Plan ==\n"
+        "  ResultQueryStage (35)\n"
+        "  +- Scan parquet  (30)\n"
+        "         +- BroadcastExchange (33)\n"
+        "            +- Scan parquet  (32)\n"
+        "\n"
+        f"(7) HashAggregate\n{agg_keys_line}\n"
+        "Functions [1]: [count(1)]\n"
+        "\n"
+        "(5) HashAggregate\nKeys: []\n"
+        "Functions [1]: [partial_count(1)]\n"
+    )
+
+
+def test_scalar_bnlj_audit_treats_subtree_ending_at_cut_as_crossing():
+    """A BNLJ whose subtree the splice truncates exactly at the cut must
+    not yield a phantom 'expected 2 children' finding; the BNLJ before
+    it keeps full strictness."""
+    from simple_etl_pipeline_spark.operators.planaudit import (
+        scalar_bnlj_violations,
+    )
+
+    assert scalar_bnlj_violations(_splice_inside_bnlj_plan("Keys: []")) == []
+    v = scalar_bnlj_violations(
+        _splice_inside_bnlj_plan("Keys [1]: [user_id#5L]")
+    )
+    assert len(v) == 1 and "(9)" in v[0] and "keyed aggregate" in v[0], v
+
+
+def test_scalar_bnlj_reused_exchange_ignores_spliced_sources():
+    """A ReusedExchange before the cut is bounded only by a source
+    exchange before the cut: a spliced exchange with the same columns
+    whose (meaningless) subtree reads as a scalar aggregate must not
+    vouch for it."""
+    from simple_etl_pipeline_spark.operators.planaudit import (
+        scalar_bnlj_violations,
+    )
+
+    plan = (
+        "== Physical Plan ==\n"
+        "AdaptiveSparkPlan (40)\n"
+        "+- BroadcastHashJoin Inner BuildRight (39)\n"
+        "   :- Project (10)\n"
+        "   :  +- * BroadcastNestedLoopJoin Cross BuildRight (9)\n"
+        "   :     :- Scan parquet  (1)\n"
+        "   :     +- ReusedExchange (8)\n"
+        "   +- BroadcastExchange (38)\n"
+        "      +- Filter (37)\n"
+        "         +- InMemoryTableScan (11)\n"
+        "               +- InMemoryRelation (12)\n"
+        "                     +- AdaptiveSparkPlan (36)\n"
+        "                        +- == Final Plan ==\n"
+        "                           BroadcastExchange (33)\n"
+        "                           +- HashAggregate (32)\n"
+        "                              +- Scan parquet  (30)\n"
+        "\n"
+        "(8) ReusedExchange [Reuses operator id: 33]\n"
+        "Output [1]: [n#1L]\n"
+        "\n"
+        "(32) HashAggregate\nKeys: []\n"
+        "Functions [1]: [count(1)]\n"
+        "\n"
+        "(33) BroadcastExchange\n"
+        "Input [1]: [n#2L]\n"
+    )
+    v = scalar_bnlj_violations(plan)
+    assert len(v) == 1 and "(9)" in v[0] and "ReusedExchange" in v[0], v

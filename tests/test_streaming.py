@@ -193,33 +193,13 @@ def test_streaming_upsert_recovers_dangling_swap(spark, tmp_path):
     assert not os.path.exists(snap + ".next")
 
 
-def test_tws_registration_matches_dependency_probe():
-    # the transformWithState twin registers only where google.protobuf
-    # works (its state-server protocol needs it); either way the
-    # applyInPandasWithState twin must always be present.
+def test_stateful_registration_is_host_independent():
+    # the applyInPandasWithState operator is the one per-user totals
+    # query, registered on every host, and every query has its oracle
     from simple_etl_pipeline_spark.streaming import stateful
 
     assert "st_user_totals_stateful" in stateful.QUERIES
-    assert ("st_user_totals_tws" in stateful.QUERIES) == stateful.tws_available()
     assert set(stateful.ORACLES) == set(stateful.QUERIES)
-
-
-@pytest.mark.skipif(
-    not __import__(
-        "simple_etl_pipeline_spark.streaming.stateful", fromlist=["x"]
-    ).tws_available(),
-    reason="google.protobuf unavailable: transformWithState cannot run here",
-)
-def test_tws_matches_oracle(spark, sf_dir):
-    from simple_etl_pipeline_spark.streaming.stateful import (
-        ST_USER_TOTALS_ORACLE,
-        st_user_totals_tws,
-    )
-    from simple_etl_pipeline_spark.testing import compare_with_oracle
-
-    compare_with_oracle(
-        st_user_totals_tws(spark, sf_dir), ST_USER_TOTALS_ORACLE, sf_dir
-    )
 
 
 def test_bucketed_state_equals_per_key_and_oracle(spark, sf_dir):
