@@ -263,8 +263,10 @@ FP_RESIDUAL = {
     # r16 find: flips between two consecutive plan_dump runs on
     # IDENTICAL code (node counts identical) — its 380+-node formatted
     # text embeds an expression-id-bearing name family the normalizer
-    # doesn't cover, and the id state now depends on shared-construction
-    # memo hits earlier in the session.
+    # doesn't cover. Not construction memos: with none left it still
+    # takes a new value on each plan_dump run (built after ~130 other
+    # queries), yet is identical across fresh sessions that build it
+    # first.
     "txt_triangle_count",
 }
 

@@ -30,17 +30,30 @@ def _strip_ws(c: Column) -> Column:
     return F.regexp_replace(c, _WS_STRIP, "")
 
 
-def tokens_col(c: Column | str) -> Column:
-    """Whitespace tokenization; empty/blank text -> empty array (split of
-    '' yields [''], which would count as one token)."""
-    c = F.col(c) if isinstance(c, str) else c
-    t = _strip_ws(c)
-    return F.when(t == "", F.array().cast("array<string>")).otherwise(
-        F.split(t, _WS_CLASS + "+")
+# The same two patterns as Spark-SQL string literals: the SQL parser
+# unescapes backslashes once, so each is doubled to hand the regex the
+# class the Column API passes.
+_WS_STRIP_SQL = "'" + _WS_STRIP.replace("\\", "\\\\") + "'"
+_WS_SPLIT_SQL = "'" + (_WS_CLASS + "+").replace("\\", "\\\\") + "'"
+
+
+def _tokens_sql(c: str) -> str:
+    stripped = f"regexp_replace({c}, {_WS_STRIP_SQL}, '')"
+    return (
+        f"CASE WHEN {stripped} = '' THEN CAST(array() AS ARRAY<STRING>) "
+        f"ELSE split({stripped}, {_WS_SPLIT_SQL}) END"
     )
 
 
-def token_count_col(c: Column | str) -> Column:
+def tokens_col(c: str) -> Column:
+    """Whitespace tokenization of column (or SQL expression) `c`;
+    empty/blank text -> empty array (split of '' yields [''], which
+    would count as one token). Built as one SQL string: the constant
+    expression then costs one py4j call, not one per node."""
+    return F.expr(_tokens_sql(c))
+
+
+def token_count_col(c: str) -> Column:
     return F.size(tokens_col(c))
 
 
@@ -61,23 +74,19 @@ def bind_once(col: Column, build) -> Column:
     return F.element_at(F.transform(F.array(col), build), 1)
 
 
-def shingles_col(c: Column | str, n: int = 3) -> Column:
-    """Word n-gram shingles as an array<string>; fewer than n tokens ->
-    empty. DuckDB twin: list_transform(generate_series(1, len-n+1),
-    i -> array_to_string(toks[i:i+n-1], ' ')). Token array bound once
-    (see bind_once) — not re-split per shingle."""
-
-    def _build(tarr: Column) -> Column:
-        return F.when(
-            F.size(tarr) < n, F.array().cast("array<string>")
-        ).otherwise(
-            F.transform(
-                F.sequence(F.lit(1), F.size(tarr) - (n - 1)),
-                lambda i: F.array_join(F.slice(tarr, i, n), " "),
-            )
-        )
-
-    return bind_once(tokens_col(c), _build)
+def shingles_col(c: str, n: int = 3) -> Column:
+    """Word n-gram shingles of column (or SQL expression) `c` as an
+    array<string>; fewer than n tokens -> empty. DuckDB twin:
+    list_transform(generate_series(1, len-n+1), i ->
+    array_to_string(toks[i:i+n-1], ' ')). The token array is bound
+    once, as bind_once does (not re-split per shingle), in one SQL
+    string."""
+    return F.expr(
+        f"element_at(transform(array({_tokens_sql(c)}), toks -> "
+        f"CASE WHEN size(toks) < {n} THEN CAST(array() AS ARRAY<STRING>) "
+        f"ELSE transform(sequence(1, size(toks) - {n - 1}), "
+        f"i -> array_join(slice(toks, i, {n}), ' ')) END), 1)"
+    )
 
 
 def md5_hash60(c: Column | str, salt: Column | str | None = None) -> Column:

@@ -74,6 +74,19 @@ def dot_dec(a: Column | str, b: Column | str) -> Column:
     )
 
 
+def dot_dec_sql(a: str, b: str) -> str:
+    """Spark-SQL text of :func:`dot_dec` over two array expressions —
+    the same analyzed tree for an F.expr, at one py4j call instead of
+    one per node. The scale is written as a double literal (`D`
+    suffix): a bare `1099511627776.0` parses as DECIMAL."""
+    scale = f"{_DOT_SCALE!r}D"
+    return (
+        f"(CAST(aggregate(zip_with({a}, {b}, "
+        f"(x, y) -> CAST(floor(x * y * {scale}) AS BIGINT)), "
+        f"CAST(0 AS BIGINT), (acc, d) -> acc + d) AS DOUBLE) / {scale})"
+    )
+
+
 def cosine_dec(a: Column | str, b: Column | str) -> Column:
     """Cosine from fixed-point-folded dot/norms: the three sums are
     bit-identical across engines (dot_dec), and sqrt/division are

@@ -23,6 +23,7 @@ from simple_etl_pipeline_spark.functions.vectors import (
     as_double_array,
     cosine_dec,
     dot_dec,
+    dot_dec_sql,
     sql_cosine_dec,
     sql_dot_dec,
 )
@@ -244,14 +245,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "v",
-            _memo_const_col(
-                "ivf_cell",
-                lambda: _best_code_fold(
-                    F.col("cvs"),
-                    lambda c: _l2_dec(F.col("v"), c.getField("cv")),
-                    "c_label",
-                ),
-            ).alias("b"),
+            F.expr(f"{_IVF_CELL_FOLD} AS b"),
         )
         .select("vec_id", "v", F.col("b.k").alias("cell"))
         .withColumn("vnrm", F.sqrt(dot_dec(F.col("v"), F.col("v"))))
@@ -338,15 +332,12 @@ COSINE_DUP_THRESHOLD = 0.999
 DUP_INJECT_OFFSET = 1 << 40
 
 def _scaled_dup_variants_col() -> F.Column:
-    base = F.struct(F.col("vec_id").alias("vec_id"), F.col("v").alias("v"))
-    dup = F.struct(
-        (F.col("vec_id") + DUP_INJECT_OFFSET).alias("vec_id"),
-        F.transform("v", lambda x: x * 1.5).alias("v"),
-    )
-    empty = F.array().cast("array<struct<vec_id:bigint,v:array<double>>>")
-    return F.concat(
-        F.array(base),
-        F.when(F.col("vec_id") % 11 == 0, F.array(dup)).otherwise(empty),
+    empty = "CAST(array() AS ARRAY<STRUCT<vec_id: BIGINT, v: ARRAY<DOUBLE>>>)"
+    return F.expr(
+        "concat(array(struct(vec_id AS vec_id, v AS v)), "
+        "CASE WHEN vec_id % 11 = 0 THEN array(struct("
+        f"vec_id + {DUP_INJECT_OFFSET} AS vec_id, "
+        f"transform(v, x -> x * 1.5D) AS v)) ELSE {empty} END)"
     )
 
 
@@ -1015,6 +1006,16 @@ def _l2_dec(a, b) -> F.Column:
     ).cast("double")
 
 
+def _l2_dec_sql(a: str, b: str) -> str:
+    """Spark-SQL text of :func:`_l2_dec` over two array expressions
+    (same analyzed tree, one py4j call)."""
+    return (
+        f"CAST(aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
+        "CAST(0 AS DECIMAL(21,12)), (acc, d) -> "
+        "CAST(acc + CAST(d AS DECIMAL(20,12)) AS DECIMAL(21,12))) AS DOUBLE)"
+    )
+
+
 def _ordered_vals(pos_col: str, val_col: str) -> F.Column:
     """collect_list values ordered by position — order-independent
     aggregation (sort_array fixes the order after collection)."""
@@ -1025,14 +1026,15 @@ def _ordered_vals(pos_col: str, val_col: str) -> F.Column:
 
 
 def _best_code_fold(
-    entries, score_fn, id_field: str, descending: bool = False
-) -> F.Column:
+    entries: str, score: str, id_field: str, descending: bool = False
+) -> str:
     """Map-side arg-min/arg-max over a broadcast array of candidate
-    structs (r15, the sim_kmeans_lloyd device generalized): `entries`
-    is an array of structs carrying the candidate id in `id_field` as
-    the struct's FIRST field, so array_sort orders the array by id —
-    the precondition for the tie rule below. `score_fn(entry) ->
-    Column` scores one candidate against the current row. Returns
+    structs (r15, the sim_kmeans_lloyd device generalized), as
+    Spark-SQL text: `entries` is an array of structs carrying the
+    candidate id in `id_field` as the struct's FIRST field, so
+    array_sort orders the array by id — the precondition for the tie
+    rule below. `score` scores one candidate, bound to the lambda
+    variable `c`, against the current row. Returns
     struct(s=score, k=candidate id) of the best entry.
 
     Replaces the row_number()-over-Window argmin: that shape shuffles
@@ -1046,50 +1048,52 @@ def _best_code_fold(
     descending (nulls-last, e.g. a cosine whose try_divide can yield
     NULL on zero norms) a non-null score always beats a null one and a
     null never displaces a non-null. Ascending assumes non-null scores
-    (all _l2_dec callers — a decimal fold over non-null arrays)."""
-    ds = F.transform(
-        entries,
-        lambda c: F.struct(
-            score_fn(c).alias("s"), c.getField(id_field).alias("k")
-        ),
-    )
+    (all _l2_dec callers — a decimal fold over non-null arrays).
+
+    SQL text, not the Column API: the Column form paid one py4j round
+    trip per expression node (47 ms per ivf_cell build) and analyzes
+    to the same plan (tests/test_plan_shapes.py pins every site)."""
     if descending:
-        take = lambda acc, x: (  # noqa: E731 — tight fold lambda
-            acc.isNull()
-            | (acc.getField("s").isNull() & x.getField("s").isNotNull())
-            | (x.getField("s") > acc.getField("s"))
-        )
+        take = "acc IS NULL OR (acc.s IS NULL AND x.s IS NOT NULL) OR x.s > acc.s"
     else:
-        take = lambda acc, x: (  # noqa: E731
-            acc.isNull() | (x.getField("s") < acc.getField("s"))
-        )
-    return F.aggregate(
-        ds,
-        F.lit(None).cast("struct<s:double,k:int>"),
-        lambda acc, x: F.when(take(acc, x), x).otherwise(acc),
+        take = "acc IS NULL OR x.s < acc.s"
+    return (
+        f"aggregate(transform({entries}, c -> struct({score} AS s, "
+        f"c.{id_field} AS k)), CAST(NULL AS STRUCT<s: DOUBLE, k: INT>), "
+        f"(acc, x) -> CASE WHEN {take} THEN x ELSE acc END)"
     )
 
 
-# Process-level memo for COMPILE-TIME-CONSTANT fold Columns (the r15
-# _rp_project device, generalized — guide §1.2: driver overhead is
-# still overhead). Each _best_code_fold call site below builds a deep
-# expression tree (zip_with + decimal-fold lambdas, ~0.1-0.4 s of py4j
-# traffic per build, measured r16) over FIXED column names — no
-# session, data-directory or SF reference — so the unresolved Column
-# is built once per process and reused; reuse equals writing the
-# identical expression twice. NOT a result/plan memo keyed on any
-# data: the keys are call-site tags, the values immutable expression
-# trees, pinned plan-identical by
-# tests/test_plan_shapes.py::test_similarity_fold_memos_plan_identical.
-_CONST_FOLD_MEMO: dict = {}
-
-
-def _memo_const_col(key: str, build) -> F.Column:
-    col = _CONST_FOLD_MEMO.get(key)
-    if col is None:
-        col = build()
-        _CONST_FOLD_MEMO[key] = col
-    return col
+# The call sites' folds: fixed SQL text over fixed column names.
+# ivf/ivfpq cell: nearest centroid to the whole vector v.
+_IVF_CELL_FOLD = _best_code_fold("cvs", _l2_dec_sql("v", "c.cv"), "c_label")
+_IVFPQ_CELL_FOLD = _best_code_fold("cvs", _l2_dec_sql("v", "c.cv"), "code")
+# pq code: nearest codebook entry to one sub-vector row sv.
+_PQ_CODE_FOLD = _best_code_fold("cbs", _l2_dec_sql("sv", "c.cv"), "code")
+# ivfpq codes: one (sub, code) struct per subspace, each code the
+# nearest entry of that subspace's codebook (cball[s], sub-ordered) to
+# the slice of v it covers.
+_IVFPQ_CODES_ARRAY = "array({})".format(
+    ", ".join(
+        f"struct(CAST({s} AS INT) AS sub, "
+        + _best_code_fold(
+            f"cball[{s}].cbs",
+            _l2_dec_sql(f"slice(v, {s * PQ_SUBDIM + 1}, {PQ_SUBDIM})", "c.cv"),
+            "code",
+        )
+        + ".k AS code)"
+        for s in range(PQ_SUBSPACES)
+    )
+)
+# semdedup cell: cosine argmax (6-dp rounded, nulls last) over the
+# centroids, with both norms precomputed (cnrm per centroid, vnrm per
+# row) in cosine_dec's try_divide(dot, |v| * |c|) operation order.
+_SEMDEDUP_CELL_FOLD = _best_code_fold(
+    "cents",
+    f"round(try_divide({dot_dec_sql('v', 'c.cv')}, vnrm * c.cnrm), 6)",
+    "c_label",
+    descending=True,
+)
 
 
 def _subvectors(frame: DataFrame, id_col: str = "vec_id") -> DataFrame:
@@ -1174,14 +1178,7 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "sub",
-            _memo_const_col(
-                "pq_code",
-                lambda: _best_code_fold(
-                    F.col("cbs"),
-                    lambda c: _l2_dec(F.col("sv"), c.getField("cv")),
-                    "code",
-                ),
-            ).alias("b"),
+            F.expr(f"{_PQ_CODE_FOLD} AS b"),
         )
         .select("vec_id", "sub", F.col("b.k").alias("code"))
     )
@@ -1332,39 +1329,8 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(cb_all))
         .select(
             "vec_id",
-            _memo_const_col(
-                "ivfpq_cell",
-                lambda: _best_code_fold(
-                    F.col("cvs"),
-                    lambda c: _l2_dec(F.col("v"), c.getField("cv")),
-                    "code",
-                ).getField("k"),
-            ).alias("cell"),
-            _memo_const_col(
-                "ivfpq_codes",
-                lambda: F.array(
-                    *[
-                        F.struct(
-                            F.lit(s).cast("int").alias("sub"),
-                            _best_code_fold(
-                                F.col("cball")
-                                .getItem(s)
-                                .getField("cbs"),
-                                lambda c, _s=s: _l2_dec(
-                                    F.slice(
-                                        "v", _s * PQ_SUBDIM + 1, PQ_SUBDIM
-                                    ),
-                                    c.getField("cv"),
-                                ),
-                                "code",
-                            )
-                            .getField("k")
-                            .alias("code"),
-                        )
-                        for s in range(PQ_SUBSPACES)
-                    ]
-                ),
-            ).alias("codes"),
+            F.expr(f"{_IVFPQ_CELL_FOLD}.k AS cell"),
+            F.expr(f"{_IVFPQ_CODES_ARRAY} AS codes"),
         )
         .persist()
     )
@@ -1588,21 +1554,7 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus_n.crossJoin(F.broadcast(cent_list))
         .select(
             "vec_id",
-            _memo_const_col(
-                "semdedup_cell",
-                lambda: _best_code_fold(
-                    F.col("cents"),
-                    lambda c: F.round(
-                        F.try_divide(
-                            dot_dec(F.col("v"), c.getField("cv")),
-                            F.col("vnrm") * c.getField("cnrm"),
-                        ),
-                        6,
-                    ),
-                    "c_label",
-                    descending=True,
-                ),
-            ).alias("b"),
+            F.expr(f"{_SEMDEDUP_CELL_FOLD} AS b"),
         )
         .select("vec_id", F.col("b.k").alias("cell"))
     )
@@ -1913,37 +1865,19 @@ def _rp_signs() -> list[list[float]]:
 _RP_SIGNS = _rp_signs()
 
 
-_RP_PROJECT_COL: "F.Column | None" = None
+def _rp_project(v: str) -> "F.Column":
+    """RP_DIMS sign-projected coordinates of the embedding column `v`:
+    one dot_dec fold per row of _RP_SIGNS against a constant +-1 array.
 
-
-def _rp_project(v) -> "F.Column":
-    """RP_DIMS sign-projected coordinates of embedding column `v`.
-
-    The expression is a COMPILE-TIME CONSTANT over the input column
-    name (16 rows x 64 +-1 literals + 16 fixed-point fold lambdas):
-    building it costs ~1 s of py4j traffic per call — more than the
-    query's own execution — so the unresolved Column is memoized at
-    module level (r15, guide §1.2: driver overhead). Column objects
-    are immutable expression trees with no session or data reference;
-    reuse across plans is the same as writing the expression twice.
-    The memo is only valid for the canonical input column name `v`,
-    which the single call site uses; any other input falls back to a
-    fresh build."""
-    from simple_etl_pipeline_spark.functions.vectors import dot_dec
-
-    global _RP_PROJECT_COL
-    is_canonical = str(v) == str(F.col("v"))
-    if is_canonical and _RP_PROJECT_COL is not None:
-        return _RP_PROJECT_COL
-    built = F.array(
-        *[
-            dot_dec(v, F.array(*[F.lit(s) for s in row]))
-            for row in _RP_SIGNS
-        ]
+    Built as ONE SQL string (16 folds x 64 literals, signs written as
+    `1.0D`/`-1.0D` double literals): through the Column API the same
+    tree cost 0.9 s of py4j traffic per build — more than the query's
+    own execution — for the same analyzed plan."""
+    folds = (
+        dot_dec_sql(v, "array({})".format(", ".join(f"{s!r}D" for s in row)))
+        for row in _RP_SIGNS
     )
-    if is_canonical:
-        _RP_PROJECT_COL = built
-    return built
+    return F.expr("array({})".format(", ".join(folds)))
 
 
 def sim_rp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1973,7 +1907,7 @@ def sim_rp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bit-identical): one 16-dim fold per corpus vector, not one per
     # (query, vector) pair
     embp = _emb(spark, sf_dir).select(
-        "vec_id", _rp_project(F.col("v")).alias("vp")
+        "vec_id", _rp_project("v").alias("vp")
     ).withColumn("pnrm", F.sqrt(dot_dec(F.col("vp"), F.col("vp"))))
     qp = embp.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),

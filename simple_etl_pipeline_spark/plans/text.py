@@ -45,22 +45,17 @@ NEAR_DUP_TAIL = " nearly duplicated tail token"
 
 
 def _dup_variants_col() -> Column:
-    base = F.struct(
-        F.col("doc_id").alias("doc_id"), F.col("text").alias("text")
-    )
-    exact = F.struct(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.col("text").alias("text"),
-    )
-    near = F.struct(
-        (F.col("doc_id") + 2000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(NEAR_DUP_TAIL)).alias("text"),
-    )
-    empty = F.array().cast("array<struct<doc_id:bigint,text:string>>")
-    return F.concat(
-        F.array(base),
-        F.when(F.col("doc_id") % 17 == 0, F.array(exact)).otherwise(empty),
-        F.when(F.col("doc_id") % 23 == 0, F.array(near)).otherwise(empty),
+    """array of (doc_id, text) variants per row: itself, plus the +1M
+    exact copy when doc_id % 17 == 0 and the +2M near-copy when
+    doc_id % 23 == 0 (see inject_dup_variants)."""
+    empty = "CAST(array() AS ARRAY<STRUCT<doc_id: BIGINT, text: STRING>>)"
+    return F.expr(
+        "concat(array(struct(doc_id AS doc_id, text AS text)), "
+        "CASE WHEN doc_id % 17 = 0 THEN array(struct("
+        f"doc_id + 1000000 AS doc_id, text AS text)) ELSE {empty} END, "
+        "CASE WHEN doc_id % 23 = 0 THEN array(struct("
+        f"doc_id + 2000000 AS doc_id, concat(text, '{NEAR_DUP_TAIL}') AS text))"
+        f" ELSE {empty} END)"
     )
 
 
@@ -549,93 +544,60 @@ _PERM = [
     for i in range(MINHASH_K)
 ]
 
-# --- constant-expression memos (r16; the sim_rp_recall _rp_project
-# device, VERDICT r15 #6): the K affine min-hash aggregates and the
-# band-key structs are COMPILE-TIME CONSTANTS (fixed literals over
-# fixed column names), yet were rebuilt through py4j on every plan
-# construction — measured ~157 ms per dedup_minhash_lsh build for the
-# 16 F.min aggregates alone, paid again by every graph-family consumer
-# that replays the pair pipeline (components_lsh, st_dedup_lsh_index's
-# stateless twin). A Column is an immutable, session- and data-free
-# expression tree; module-level reuse equals writing the expression
-# twice — NOT a result/plan memo keyed on any data directory.
-# sameResult pinned by tests/test_plan_shapes.py::
-# test_text_constant_memos_plan_identical.
-_MH_AGG_COLS: list | None = None
-_BAND_STRUCT_COLS: list | None = None
-_MH_STATELESS_COLS: list | None = None
-_BAND_STRUCT_BIGINT_COLS: list | None = None
+# The min-hash aggregates and band-key structs are compile-time
+# constants over fixed column names, so each is ONE SQL string (alias
+# inside): the Column API built the same analyzed trees at one py4j
+# round trip per node (74 ms for the 16 aggregates, 45 ms for the band
+# structs, on every build). sameResult to the Column-API forms is
+# pinned by tests/test_plan_shapes.py.
 
 
 def _mh_agg_cols() -> list:
-    """F.min((a_i*h31 + b_i) % P) AS mh_i for the K permutations —
-    dedup_minhash_lsh's signature aggregates, built once per process."""
-    global _MH_AGG_COLS
-    if _MH_AGG_COLS is None:
-        _MH_AGG_COLS = [
-            F.min(
-                (F.lit(a) * F.col("h31") + F.lit(b)) % MINHASH_P
-            ).alias(f"mh{i}")
-            for i, (a, b) in enumerate(_PERM)
-        ]
-    return _MH_AGG_COLS
-
-
-def _band_struct_cols() -> list:
-    """struct(band, bkey) per band over mh0..mhK-1 — the batch band
-    explode payload, built once per process."""
-    global _BAND_STRUCT_COLS
-    if _BAND_STRUCT_COLS is None:
-        _BAND_STRUCT_COLS = [
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"mh{b * _ROWS_PER_BAND + j}").cast("string")
-                        for j in range(_ROWS_PER_BAND)
-                    ],
-                ).alias("bkey"),
-            )
-            for b in range(MINHASH_BANDS)
-        ]
-    return _BAND_STRUCT_COLS
+    """min((a_i*h31 + b_i) % P) AS mh_i for the K permutations —
+    dedup_minhash_lsh's signature aggregates."""
+    return [
+        F.expr(f"min(({a} * h31 + {b}) % {MINHASH_P}) AS mh{i}")
+        for i, (a, b) in enumerate(_PERM)
+    ]
 
 
 def _mh_stateless_cols() -> list:
     """array_min over the affine rehash of the in-row h31s array — the
     stateless (streaming-safe) twin of _mh_agg_cols."""
-    global _MH_STATELESS_COLS
-    if _MH_STATELESS_COLS is None:
-        _MH_STATELESS_COLS = [
-            F.expr(
-                f"array_min(transform(h31s, h -> ({a} * h + {b})"
-                f" % {MINHASH_P}))"
-            ).alias(f"mh{i}")
-            for i, (a, b) in enumerate(_PERM)
-        ]
-    return _MH_STATELESS_COLS
+    return [
+        F.expr(
+            f"array_min(transform(h31s, h -> ({a} * h + {b})"
+            f" % {MINHASH_P})) AS mh{i}"
+        )
+        for i, (a, b) in enumerate(_PERM)
+    ]
+
+
+def _bkey_sql(band: int) -> str:
+    """The comma-joined min-hash slots of one band."""
+    slots = ", ".join(
+        f"CAST(mh{band * _ROWS_PER_BAND + j} AS STRING)"
+        for j in range(_ROWS_PER_BAND)
+    )
+    return f"concat_ws(',', {slots})"
+
+
+def _band_struct_cols() -> list:
+    """struct(band, bkey) per band over mh0..mhK-1 — the batch band
+    explode payload."""
+    return [
+        F.expr(f"struct({b} AS band, {_bkey_sql(b)} AS bkey)")
+        for b in range(MINHASH_BANDS)
+    ]
 
 
 def _band_struct_bigint_cols() -> list:
     """The stateless band structs (band typed bigint, matching the
-    streaming output schema), built once per process."""
-    global _BAND_STRUCT_BIGINT_COLS
-    if _BAND_STRUCT_BIGINT_COLS is None:
-        _BAND_STRUCT_BIGINT_COLS = [
-            F.struct(
-                F.lit(b).cast("bigint").alias("band"),
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"mh{b * _ROWS_PER_BAND + j}").cast("string")
-                        for j in range(_ROWS_PER_BAND)
-                    ],
-                ).alias("bkey"),
-            )
-            for b in range(MINHASH_BANDS)
-        ]
-    return _BAND_STRUCT_BIGINT_COLS
+    streaming output schema)."""
+    return [
+        F.expr(f"struct(CAST({b} AS BIGINT) AS band, {_bkey_sql(b)} AS bkey)")
+        for b in range(MINHASH_BANDS)
+    ]
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -990,7 +952,7 @@ FROM documents GROUP BY lang ORDER BY lang
 WINNOW_WINDOW = 4
 
 
-def shingle_hashes_col(text: str | F.Column) -> F.Column:
+def shingle_hashes_col(text: str) -> F.Column:
     """md5 60-bit hash per word-3-gram shingle. Project this to a named
     column BEFORE passing it to winnow_fps_col — the fps expression
     references the hash array W+1 times, and each reference would

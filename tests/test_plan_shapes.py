@@ -239,107 +239,300 @@ def test_rp_projection_is_mapside_with_broadcast_panel(spark, sf_dir):
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
-def test_rp_project_memo_is_plan_identical(spark, sf_dir):
-    """The r15 construction memo of the constant JL projection Column
-    must be invisible to the plan: a memo hit for the canonical input
-    returns the identical expression object, non-canonical inputs fall
-    back to a fresh build, and a query built from the memo analyzes to
-    the same plan as one built from scratch (the memo can never change
-    what the query computes)."""
-    import pyspark.sql.functions as F
+# --- constant expressions as SQL text ------------------------------------
+# The package builds every compile-time-constant expression as one SQL
+# string per output column. Below are the Column-API builders those
+# strings replaced, kept as the reference forms: each SQL-text builder
+# must analyze sameResult to its reference, alone and inside the
+# queries that use it.
 
-    from simple_etl_pipeline_spark.plans import similarity as simmod
 
-    c1 = simmod._rp_project(F.col("v"))
-    c2 = simmod._rp_project(F.col("v"))
-    assert c1 is c2  # memo hit
-    c3 = simmod._rp_project(F.col("other"))
-    assert c3 is not c1  # non-canonical input never served from memo
-    df_memo = simmod.sim_rp_recall(spark, sf_dir)
-    saved, simmod._RP_PROJECT_COL = simmod._RP_PROJECT_COL, None
-    try:
-        df_fresh = simmod.sim_rp_recall(spark, sf_dir)
-    finally:
-        simmod._RP_PROJECT_COL = saved
-    assert (
-        df_memo._jdf.queryExecution()
+def _same_result(a, b) -> bool:
+    return (
+        a._jdf.queryExecution()
         .analyzed()
-        .sameResult(df_fresh._jdf.queryExecution().analyzed())
+        .sameResult(b._jdf.queryExecution().analyzed())
     )
 
 
-def test_text_constant_memos_plan_identical(spark, sf_dir):
-    """The r16 construction memos of the constant min-hash expressions
-    (the K affine min-hash aggregates, the band-key structs and their
-    stateless twins) must be invisible to the plan: memo hits return
-    the identical objects, and a query built from the memos analyzes
-    to the same plan as one built from scratch — the memos can never
-    change what a query computes."""
-    from simple_etl_pipeline_spark.plans import text as txtmod
+def _ref_mh_agg_cols() -> list:
+    import pyspark.sql.functions as F
 
-    assert txtmod._mh_agg_cols() is txtmod._mh_agg_cols()
-    assert txtmod._band_struct_cols() is txtmod._band_struct_cols()
+    from simple_etl_pipeline_spark.plans.text import _PERM, MINHASH_P
 
-    def _reset():
-        saved = (
-            txtmod._MH_AGG_COLS,
-            txtmod._BAND_STRUCT_COLS,
-            txtmod._MH_STATELESS_COLS,
-            txtmod._BAND_STRUCT_BIGINT_COLS,
+    return [
+        F.min((F.lit(a) * F.col("h31") + F.lit(b)) % MINHASH_P).alias(f"mh{i}")
+        for i, (a, b) in enumerate(_PERM)
+    ]
+
+
+def _ref_mh_stateless_cols() -> list:
+    import pyspark.sql.functions as F
+
+    from simple_etl_pipeline_spark.plans.text import _PERM, MINHASH_P
+
+    return [
+        F.expr(
+            f"array_min(transform(h31s, h -> ({a} * h + {b}) % {MINHASH_P}))"
+        ).alias(f"mh{i}")
+        for i, (a, b) in enumerate(_PERM)
+    ]
+
+
+def _ref_band_struct_cols(bigint: bool = False) -> list:
+    import pyspark.sql.functions as F
+
+    from simple_etl_pipeline_spark.plans.text import (
+        _ROWS_PER_BAND,
+        MINHASH_BANDS,
+    )
+
+    return [
+        F.struct(
+            (F.lit(b).cast("bigint") if bigint else F.lit(b)).alias("band"),
+            F.concat_ws(
+                ",",
+                *[
+                    F.col(f"mh{b * _ROWS_PER_BAND + j}").cast("string")
+                    for j in range(_ROWS_PER_BAND)
+                ],
+            ).alias("bkey"),
         )
-        txtmod._MH_AGG_COLS = None
-        txtmod._BAND_STRUCT_COLS = None
-        txtmod._MH_STATELESS_COLS = None
-        txtmod._BAND_STRUCT_BIGINT_COLS = None
-        return saved
+        for b in range(MINHASH_BANDS)
+    ]
 
-    def _restore(saved):
-        (
-            txtmod._MH_AGG_COLS,
-            txtmod._BAND_STRUCT_COLS,
-            txtmod._MH_STATELESS_COLS,
-            txtmod._BAND_STRUCT_BIGINT_COLS,
-        ) = saved
 
+def _ref_rp_project(v):
+    import pyspark.sql.functions as F
+
+    from simple_etl_pipeline_spark.functions.vectors import dot_dec
+    from simple_etl_pipeline_spark.plans.similarity import _RP_SIGNS
+
+    return F.array(
+        *[dot_dec(v, F.array(*[F.lit(s) for s in row])) for row in _RP_SIGNS]
+    )
+
+
+def _ref_best_code_fold(entries, score_fn, id_field, descending=False):
+    import pyspark.sql.functions as F
+
+    ds = F.transform(
+        entries,
+        lambda c: F.struct(
+            score_fn(c).alias("s"), c.getField(id_field).alias("k")
+        ),
+    )
+    if descending:
+        take = lambda acc, x: (  # noqa: E731
+            acc.isNull()
+            | (acc.getField("s").isNull() & x.getField("s").isNotNull())
+            | (x.getField("s") > acc.getField("s"))
+        )
+    else:
+        take = lambda acc, x: (  # noqa: E731
+            acc.isNull() | (x.getField("s") < acc.getField("s"))
+        )
+    return F.aggregate(
+        ds,
+        F.lit(None).cast("struct<s:double,k:int>"),
+        lambda acc, x: F.when(take(acc, x), x).otherwise(acc),
+    )
+
+
+def _ref_tokens_col(c):
+    import pyspark.sql.functions as F
+
+    from simple_etl_pipeline_spark.functions.text import _WS_CLASS, _strip_ws
+
+    t = _strip_ws(F.col(c))
+    return F.when(t == "", F.array().cast("array<string>")).otherwise(
+        F.split(t, _WS_CLASS + "+")
+    )
+
+
+def _ref_shingles_col(c, n=3):
+    import pyspark.sql.functions as F
+
+    from simple_etl_pipeline_spark.functions.text import bind_once
+
+    def _build(tarr):
+        return F.when(
+            F.size(tarr) < n, F.array().cast("array<string>")
+        ).otherwise(
+            F.transform(
+                F.sequence(F.lit(1), F.size(tarr) - (n - 1)),
+                lambda i: F.array_join(F.slice(tarr, i, n), " "),
+            )
+        )
+
+    return bind_once(_ref_tokens_col(c), _build)
+
+
+def _ref_dup_variants_col():
+    import pyspark.sql.functions as F
+
+    from simple_etl_pipeline_spark.plans.text import NEAR_DUP_TAIL
+
+    base = F.struct(F.col("doc_id").alias("doc_id"), F.col("text").alias("text"))
+    exact = F.struct(
+        (F.col("doc_id") + 1000000).alias("doc_id"), F.col("text").alias("text")
+    )
+    near = F.struct(
+        (F.col("doc_id") + 2000000).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(NEAR_DUP_TAIL)).alias("text"),
+    )
+    empty = F.array().cast("array<struct<doc_id:bigint,text:string>>")
+    return F.concat(
+        F.array(base),
+        F.when(F.col("doc_id") % 17 == 0, F.array(exact)).otherwise(empty),
+        F.when(F.col("doc_id") % 23 == 0, F.array(near)).otherwise(empty),
+    )
+
+
+def _ref_scaled_dup_variants_col():
+    import pyspark.sql.functions as F
+
+    from simple_etl_pipeline_spark.plans.similarity import DUP_INJECT_OFFSET
+
+    base = F.struct(F.col("vec_id").alias("vec_id"), F.col("v").alias("v"))
+    dup = F.struct(
+        (F.col("vec_id") + DUP_INJECT_OFFSET).alias("vec_id"),
+        F.transform("v", lambda x: x * 1.5).alias("v"),
+    )
+    empty = F.array().cast("array<struct<vec_id:bigint,v:array<double>>>")
+    return F.concat(
+        F.array(base),
+        F.when(F.col("vec_id") % 11 == 0, F.array(dup)).otherwise(empty),
+    )
+
+
+def _ref_fold_sites() -> dict:
+    """The similarity fold sites' SQL strings -> their Column-API forms."""
+    import pyspark.sql.functions as F
+
+    from simple_etl_pipeline_spark.functions.vectors import dot_dec
+    from simple_etl_pipeline_spark.plans import similarity as simmod
+
+    l2 = simmod._l2_dec
+
+    def cell(id_field):
+        return _ref_best_code_fold(
+            F.col("cvs"), lambda c: l2(F.col("v"), c.getField("cv")), id_field
+        )
+
+    codes = F.array(
+        *[
+            F.struct(
+                F.lit(s).cast("int").alias("sub"),
+                _ref_best_code_fold(
+                    F.col("cball").getItem(s).getField("cbs"),
+                    lambda c, _s=s: l2(
+                        F.slice("v", _s * simmod.PQ_SUBDIM + 1, simmod.PQ_SUBDIM),
+                        c.getField("cv"),
+                    ),
+                    "code",
+                )
+                .getField("k")
+                .alias("code"),
+            )
+            for s in range(simmod.PQ_SUBSPACES)
+        ]
+    )
+    semdedup = _ref_best_code_fold(
+        F.col("cents"),
+        lambda c: F.round(
+            F.try_divide(
+                dot_dec(F.col("v"), c.getField("cv")),
+                F.col("vnrm") * c.getField("cnrm"),
+            ),
+            6,
+        ),
+        "c_label",
+        descending=True,
+    )
+    return {
+        f"{simmod._IVF_CELL_FOLD} AS b": cell("c_label").alias("b"),
+        f"{simmod._PQ_CODE_FOLD} AS b": _ref_best_code_fold(
+            F.col("cbs"), lambda c: l2(F.col("sv"), c.getField("cv")), "code"
+        ).alias("b"),
+        f"{simmod._IVFPQ_CELL_FOLD}.k AS cell": cell("code")
+        .getField("k")
+        .alias("cell"),
+        f"{simmod._IVFPQ_CODES_ARRAY} AS codes": codes.alias("codes"),
+        f"{simmod._SEMDEDUP_CELL_FOLD} AS b": semdedup.alias("b"),
+    }
+
+
+class _ExprSwap:
+    """Stands in for pyspark.sql.functions inside a module: expr()
+    serves the given SQL strings as their reference Columns and
+    records which it served; everything else is the real module."""
+
+    def __init__(self, refs: dict):
+        import pyspark.sql.functions as F
+
+        self._F, self.refs, self.served = F, refs, set()
+
+    def __getattr__(self, name):
+        return getattr(self._F, name)
+
+    def expr(self, sql):
+        if sql in self.refs:
+            self.served.add(sql)
+            return self.refs[sql]
+        return self._F.expr(sql)
+
+
+def test_rp_project_sql_text_plan_identical(spark, sf_dir, monkeypatch):
+    """_rp_project's one SQL string (16 dot_dec folds over +-1.0D
+    literal arrays) analyzes to the Column-API projection, alone and
+    inside sim_rp_recall."""
+    from simple_etl_pipeline_spark.plans import similarity as simmod
+
+    emb = spark.createDataFrame([([0.5] * 64,)], "v array<double>")
+    assert _same_result(
+        emb.select(simmod._rp_project("v")),
+        emb.select(_ref_rp_project(emb["v"])),
+    )
+    df_sql = simmod.sim_rp_recall(spark, sf_dir)
+    monkeypatch.setattr(
+        simmod, "_rp_project", lambda v: _ref_rp_project(simmod.F.col(v))
+    )
+    assert _same_result(df_sql, simmod.sim_rp_recall(spark, sf_dir))
+
+
+def test_text_constant_sql_plan_identical(spark, sf_dir, monkeypatch):
+    """The min-hash aggregates, the band-key structs and their
+    stateless twins, built as SQL text, give the same plans as their
+    Column-API forms in dedup_minhash_lsh and the stateless band
+    frame."""
+    from simple_etl_pipeline_spark.plans import text as txtmod
     from simple_etl_pipeline_spark.schemas import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    df_memo_batch = txtmod.dedup_minhash_lsh(spark, sf_dir)
-    df_memo_stateless = txtmod.minhash_band_keys_stateless(docs)
-    saved = _reset()
-    try:
-        df_fresh_batch = txtmod.dedup_minhash_lsh(spark, sf_dir)
-        df_fresh_stateless = txtmod.minhash_band_keys_stateless(docs)
-    finally:
-        _restore(saved)
-    for memo_df, fresh_df in (
-        (df_memo_batch, df_fresh_batch),
-        (df_memo_stateless, df_fresh_stateless),
-    ):
-        assert (
-            memo_df._jdf.queryExecution()
-            .analyzed()
-            .sameResult(fresh_df._jdf.queryExecution().analyzed())
-        )
+    sql_dfs = [
+        txtmod.dedup_minhash_lsh(spark, sf_dir),
+        txtmod.minhash_band_keys_stateless(docs),
+    ]
+    monkeypatch.setattr(txtmod, "_mh_agg_cols", _ref_mh_agg_cols)
+    monkeypatch.setattr(txtmod, "_mh_stateless_cols", _ref_mh_stateless_cols)
+    monkeypatch.setattr(txtmod, "_band_struct_cols", _ref_band_struct_cols)
+    monkeypatch.setattr(
+        txtmod, "_band_struct_bigint_cols", lambda: _ref_band_struct_cols(True)
+    )
+    ref_dfs = [
+        txtmod.dedup_minhash_lsh(spark, sf_dir),
+        txtmod.minhash_band_keys_stateless(docs),
+    ]
+    for sql_df, ref_df in zip(sql_dfs, ref_dfs):
+        assert _same_result(sql_df, ref_df)
 
 
-def test_similarity_fold_memos_plan_identical(spark, sf_dir):
-    """The r16 construction memos of the constant _best_code_fold
-    expressions (ivf/ivfpq cell assignment, pq/ivfpq code assignment,
-    semdedup cosine argmax — ~0.1-0.4 s of py4j traffic each per
-    build) must be invisible to the plan: memo hits return identical
-    objects and every consumer built from the memos analyzes to the
-    same plan as one built from scratch — the memos can never change
-    what a query computes."""
-    import pyspark.sql.functions as F
-
+def test_similarity_fold_sql_plan_identical(spark, sf_dir, monkeypatch):
+    """The five _best_code_fold sites (ivf/ivfpq cell assignment,
+    pq/ivfpq code assignment, semdedup cosine argmax) as SQL text give
+    the same plans as their Column-API forms in every consumer."""
     from simple_etl_pipeline_spark.plans import similarity as simmod
-
-    # memo hits are identical objects
-    a = simmod._memo_const_col("ivfpq_cell_probe", lambda: F.lit(1))
-    b = simmod._memo_const_col("ivfpq_cell_probe", lambda: F.lit(2))
-    assert a is b  # second build fn never runs on a hit
-    simmod._CONST_FOLD_MEMO.pop("ivfpq_cell_probe", None)
 
     consumers = (
         simmod.sim_ivf_topk,
@@ -347,20 +540,76 @@ def test_similarity_fold_memos_plan_identical(spark, sf_dir):
         simmod.sim_ivfpq_topk,
         simmod.dedup_semdedup,
     )
-    memo_dfs = [fn(spark, sf_dir) for fn in consumers]
-    saved = dict(simmod._CONST_FOLD_MEMO)
-    simmod._CONST_FOLD_MEMO.clear()
-    try:
-        fresh_dfs = [fn(spark, sf_dir) for fn in consumers]
-    finally:
-        simmod._CONST_FOLD_MEMO.clear()
-        simmod._CONST_FOLD_MEMO.update(saved)
-    for memo_df, fresh_df in zip(memo_dfs, fresh_dfs):
-        assert (
-            memo_df._jdf.queryExecution()
-            .analyzed()
-            .sameResult(fresh_df._jdf.queryExecution().analyzed())
-        )
+    sql_dfs = [fn(spark, sf_dir) for fn in consumers]
+    swap = _ExprSwap(_ref_fold_sites())
+    monkeypatch.setattr(simmod, "F", swap)
+    ref_dfs = [fn(spark, sf_dir) for fn in consumers]
+    assert swap.served == set(swap.refs)  # every site took its reference
+    for sql_df, ref_df in zip(sql_dfs, ref_dfs):
+        assert _same_result(sql_df, ref_df)
+
+
+def test_sql_text_builders_plan_identical(spark):
+    """tokens_col, shingles_col, both dup-variant builders and the
+    dot_dec / _l2_dec templates analyze to their Column-API forms."""
+    import pyspark.sql.functions as F
+
+    from simple_etl_pipeline_spark.functions.text import shingles_col, tokens_col
+    from simple_etl_pipeline_spark.functions.vectors import dot_dec, dot_dec_sql
+    from simple_etl_pipeline_spark.plans import similarity as simmod
+    from simple_etl_pipeline_spark.plans import text as txtmod
+
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id bigint, text string")
+    pairs = [
+        (tokens_col("text"), _ref_tokens_col("text")),
+        (shingles_col("text"), _ref_shingles_col("text")),
+        (shingles_col("text", 2), _ref_shingles_col("text", 2)),
+        (txtmod._dup_variants_col(), _ref_dup_variants_col()),
+    ]
+    for sql_col, ref_col in pairs:
+        assert _same_result(docs.select(sql_col), docs.select(ref_col))
+    emb = spark.createDataFrame(
+        [(1, [0.5, -1.25], [2.0, 0.75])], "vec_id bigint, v array<double>, w array<double>"
+    )
+    pairs = [
+        (simmod._scaled_dup_variants_col(), _ref_scaled_dup_variants_col()),
+        (F.expr(dot_dec_sql("v", "w")), dot_dec("v", "w")),
+        (F.expr(simmod._l2_dec_sql("v", "w")), simmod._l2_dec("v", "w")),
+    ]
+    for sql_col, ref_col in pairs:
+        assert _same_result(emb.select(sql_col), emb.select(ref_col))
+
+
+def test_dedup_builders_sql_plan_identical(spark, sf_dir, monkeypatch):
+    """dedup_ngram_jaccard — dedup_components' pre-clustering pipeline
+    — builds the same plan with the SQL-text tokenizers and dup
+    variants as with their Column-API forms."""
+    from simple_etl_pipeline_spark.plans import text as txtmod
+
+    df_sql = txtmod.dedup_ngram_jaccard(spark, sf_dir)
+    monkeypatch.setattr(txtmod, "tokens_col", _ref_tokens_col)
+    monkeypatch.setattr(txtmod, "shingles_col", _ref_shingles_col)
+    monkeypatch.setattr(txtmod, "_dup_variants_col", _ref_dup_variants_col)
+    assert _same_result(df_sql, txtmod.dedup_ngram_jaccard(spark, sf_dir))
+
+
+def test_sql_tokenizers_rows_equal_on_whitespace_edges(spark):
+    """Same rows as the Column-API tokenizers on the whitespace edge
+    cases (tab, \\x0b, \\xa0, empty, leading/trailing separators): the
+    SQL literal escaping hands the regex the same class."""
+    from test_property_cross_engine import WS_EDGE_CASES
+
+    from simple_etl_pipeline_spark.functions.text import shingles_col, tokens_col
+
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(WS_EDGE_CASES)], "i int, s string")
+    for sql_col, ref_col in (
+        (tokens_col("s"), _ref_tokens_col("s")),
+        (shingles_col("s"), _ref_shingles_col("s")),
+        (shingles_col("s", 2), _ref_shingles_col("s", 2)),
+    ):
+        got = df.select("i", sql_col.alias("x")).orderBy("i").collect()
+        exp = df.select("i", ref_col.alias("x")).orderBy("i").collect()
+        assert got == exp
 
 
 def test_kl_drift_joins_aggregates_not_tokens(spark, sf_dir):

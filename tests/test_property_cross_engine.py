@@ -17,7 +17,7 @@ import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -36,6 +36,24 @@ text_soup = st.text(
     alphabet=st.characters(exclude_categories=("Cs",)), min_size=0, max_size=40
 )
 
+# Whitespace edge cases the tokenizers must agree on in both engines:
+# tab, \x0b (in Java's \s but not RE2's), \xa0 (stripped by DuckDB's
+# trim but not Spark's), the empty string, and leading / trailing /
+# repeated separators.
+WS_EDGE_CASES = [
+    "",
+    " ",
+    "a\tb",
+    "a\x0bb",
+    "a\xa0b",
+    "\xa0",
+    "  lead",
+    "trail  ",
+    "\t\n mid \r\f sep \n",
+    "one two three four",
+    "x\x0b y\xa0 z\t\tw",
+]
+
 _SETTINGS = settings(
     max_examples=25,
     deadline=None,
@@ -50,7 +68,7 @@ def _both_engines(spark, tmp_path_factory, values, spark_expr, duck_expr):
     got = [
         r[0]
         for r in spark.read.parquet(path)
-        .select(spark_expr(F.col("s")))
+        .select(spark_expr("s"))
         .collect()
     ]
     exp = [
@@ -64,6 +82,7 @@ def _both_engines(spark, tmp_path_factory, values, spark_expr, duck_expr):
 
 @_SETTINGS
 @given(st.lists(text_soup, min_size=1, max_size=30))
+@example(WS_EDGE_CASES)
 def test_tokens_identical(spark, tmp_path_factory, values):
     got, exp = _both_engines(
         spark, tmp_path_factory, values, tokens_col, sql_tokens
@@ -74,6 +93,7 @@ def test_tokens_identical(spark, tmp_path_factory, values):
 
 @_SETTINGS
 @given(st.lists(text_soup, min_size=1, max_size=30))
+@example(WS_EDGE_CASES)
 def test_shingles_identical(spark, tmp_path_factory, values):
     got, exp = _both_engines(
         spark,
