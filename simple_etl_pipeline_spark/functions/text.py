@@ -53,10 +53,6 @@ def tokens_col(c: str) -> Column:
     return F.expr(_tokens_sql(c))
 
 
-def token_count_col(c: str) -> Column:
-    return F.size(tokens_col(c))
-
-
 def bind_once(col: Column, build) -> Column:
     """Evaluate `col` ONCE and hand it to `build` as a bound lambda
     variable (array(col) -> transform(build) -> element_at 1).

@@ -8,9 +8,15 @@ schemas mirror FIXTURES.md §5.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import TYPE_CHECKING
+
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamReader
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 # Raw scrape output: 7 string columns (reference utils/extract.py:76-84).
 RAW_PRODUCT_SCHEMA = T.StructType(
@@ -67,7 +73,7 @@ def _st(*fields: tuple[str, T.DataType]) -> T.StructType:
 # schema, building a plan submits ZERO jobs (enforced by
 # tests/test_laziness.py). events.ts is TIMESTAMP(MICROS) in current
 # testdata generations; older TIMESTAMP(NANOS) files take a fallback
-# read path (see load_table below).
+# read path (see read_events below).
 TABLE_SCHEMAS: dict[str, T.StructType] = {
     "region": _st(("r_regionkey", T.IntegerType()), ("r_name", T.StringType())),
     "nation": _st(
@@ -139,21 +145,42 @@ TABLE_SCHEMAS: dict[str, T.StructType] = {
     ),
 }
 
-# Small dimensions that should always be broadcast in joins.
-BROADCAST_TABLES = {"region", "nation", "supplier", "part", "customer"}
-
-
-def _events_ts_is_nanos(sf_dir: str) -> bool:
-    """Whether events.ts is stored as TIMESTAMP(NANOS). Testdata
-    generations have flipped between NANOS and MICROS, and misreading
-    the unit shifts every epoch by 1000x. One driver-side pyarrow footer
-    read per call (no Spark job, ~0.1 ms), never cached: a directory
-    can be rewritten in place with the other unit."""
+def events_ts_type(sf_dir: str) -> pa.DataType:
+    """The arrow type events.ts is stored as in sf_dir's events table.
+    Testdata generations have flipped between TIMESTAMP(NANOS) and
+    TIMESTAMP(MICROS), and misreading the unit shifts every epoch by
+    1000x. One driver-side pyarrow footer read per call (no Spark job,
+    ~0.1 ms), never cached: a directory can be rewritten in place with
+    the other unit."""
     import pyarrow.dataset as ds
 
     # dataset() resolves both single-file and Spark directory layouts.
     schema = ds.dataset(f"{sf_dir}/events.parquet", format="parquet").schema
-    return getattr(schema.field("ts").type, "unit", None) == "ns"
+    return schema.field("ts").type
+
+
+def read_events(
+    spark: SparkSession,
+    reader: DataFrameReader | DataStreamReader,
+    sf_dir: str,
+    path: str,
+) -> DataFrame:
+    """Events parquet at `path` through `reader` (spark.read, or a
+    spark.readStream builder), with ts decoded by the unit sf_dir's
+    events table holds now (events_ts_type). The one place that decodes
+    the unit: Spark has no nanosecond timestamp type and rejects
+    TIMESTAMP(NANOS) by default, so nanos files are read as bigint
+    under nanosAsLong and truncated to microsecond timestamps
+    (consistent with DuckDB's epoch() floor)."""
+    schema = TABLE_SCHEMAS["events"]
+    if getattr(events_ts_type(sf_dir), "unit", None) != "ns":
+        return reader.schema(schema).parquet(path)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    as_long = T.StructType(
+        [T.StructField("ts", T.LongType()) if f.name == "ts" else f for f in schema]
+    )
+    raw = reader.schema(as_long).parquet(path)
+    return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
 
 
 # --- size-conditional scan parallelization (r15, guide §2.5/§6) ----------
@@ -265,34 +292,12 @@ def load_table(
     # UTC. Runtime-settable, so harness-provided sessions built without
     # our factory (session.py sets it too) get the same alignment.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events" and _events_ts_is_nanos(sf_dir):
-        # Older testdata generations store events.ts as TIMESTAMP(NANOS),
-        # which Spark's reader rejects by default: read it as bigint nanos
-        # and convert to microsecond timestamps (truncation, consistent
-        # with DuckDB's epoch() floor). Newer generations use plain
-        # TIMESTAMP(MICROS) which reads directly via TABLE_SCHEMAS.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        schema = _st(
-            ("event_id", T.LongType()),
-            ("ts", T.LongType()),
-            ("user_id", T.LongType()),
-            ("event_type", T.StringType()),
-            ("value", T.DoubleType()),
-            ("props", T.StringType()),
-        )
-        df = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        if not parallelize:
-            return df
-        return _parallelize_small_scan(spark, df, sf_dir, name)
-    # Explicit schema: no footer-inference job at plan-build time.
-    df = spark.read.schema(TABLE_SCHEMAS[name]).parquet(
-        f"{sf_dir}/{name}.parquet"
-    )
+    path = f"{sf_dir}/{name}.parquet"
+    if name == "events":
+        df = read_events(spark, spark.read, sf_dir, path)
+    else:
+        # Explicit schema: no footer-inference job at plan-build time.
+        df = spark.read.schema(TABLE_SCHEMAS[name]).parquet(path)
     if not parallelize:
         return df
     return _parallelize_small_scan(spark, df, sf_dir, name)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}

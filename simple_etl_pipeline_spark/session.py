@@ -69,8 +69,9 @@ def get_spark(
         # nanos-unit detection in schemas.py) and is deprecated in the
         # parquet spec; micros round-trips bit-exact with our readers.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        # testdata events.parquet stores TIMESTAMP(NANOS); Spark has no
-        # nanos timestamp type — read as long, converted in load_table.
+        # older testdata events.parquet stores TIMESTAMP(NANOS); Spark has
+        # no nanos timestamp type — read as long, converted in
+        # schemas.read_events.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", driver_memory)

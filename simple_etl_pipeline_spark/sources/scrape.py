@@ -2,16 +2,16 @@
 
 The reference fetches 50 HTML pages sequentially with a 1.5 s politeness
 sleep and parses product cards with BeautifulSoup into a pandas frame
-(/root/reference/utils/extract.py:90-141). Here the parse runs *inside
-executors* via mapInPandas over a DataFrame of page documents, so
-ingest scales with the cluster; fetching is pluggable:
+(reference utils/extract.py:90-141). Here one scan serves both
+the live site and saved pages:
 
-- file mode (ingest_html_files): spark.read.text(wholetext) over saved
-  pages — hermetic, used by tests (mirrors the reference's mocked
-  tests, tests/test_extract.py:26-41);
-- driver fetch (fetch_pages): stdlib urllib, politeness delay, per-page
-  error skip — only for the real site; returns plain rows so the same
-  mapInPandas path applies.
+- fetch_pages: the only HTTP code. The reference's serial crawl
+  (stdlib urllib, politeness delay between pages, per-page error skip)
+  writes each fetched page as an .html file into a directory;
+- ingest_html_files: spark.read.text(wholetext) over such a directory,
+  parsed *inside executors* via mapInPandas, so the parse scales with
+  the cluster. Tests feed it saved pages (mirroring the reference's
+  mocked tests, tests/test_extract.py:26-41).
 
 Card semantics reproduced exactly (utils/extract.py:35-87): title from
 h3.product-title (card skipped if missing), price from span.price
@@ -188,26 +188,37 @@ def ingest_html_files(
 
 
 def fetch_pages(
+    out_dir: str,
     base_url: str = BASE_URL,
     total_pages: int = TOTAL_PAGES,
     delay_seconds: float = 1.5,
     timeout: float = 10.0,
 ) -> list[str]:
-    """Driver-side page fetch (network!) mirroring the reference's loop:
-    per-page errors are skipped, politeness delay between pages
-    (utils/extract.py:90-141). 50 pages is driver-trivial; the parse is
-    what distributes."""
+    """Crawl the site into out_dir (network!), one page{N}.html per
+    fetched page, for ingest_html_files to read. Mirrors the reference's
+    loop (utils/extract.py:90-141): pages are fetched one at a time with
+    the politeness delay between them, and a page that fails is skipped.
+    out_dir must not exist yet (FileExistsError otherwise), so a page
+    that fails now is never read from an earlier crawl. Returns the
+    written file paths."""
+    import os
     import time
     import urllib.request
 
-    pages: list[str] = []
+    os.makedirs(out_dir)
+    written: list[str] = []
     for page in range(1, total_pages + 1):
         url = build_page_url(base_url, page)
         try:
             with urllib.request.urlopen(url, timeout=timeout) as resp:
-                pages.append(resp.read().decode("utf-8", errors="replace"))
+                html = resp.read().decode("utf-8", errors="replace")
         except Exception:  # noqa: BLE001 — per-page skip, like the reference
             pass
+        else:
+            path = os.path.join(out_dir, f"page{page}.html")
+            with open(path, "w", encoding="utf-8") as f:
+                f.write(html)
+            written.append(path)
         if page < total_pages:
             time.sleep(delay_seconds)
-    return pages
+    return written

@@ -18,47 +18,20 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from simple_etl_pipeline_spark.functions.agg import dsum, epoch_seconds
 from simple_etl_pipeline_spark.plans.events import EV_SESSION_ORACLE
-
-def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
-
-# Current testdata stores ts as TIMESTAMP(MICROS), read directly. Older
-# generations used TIMESTAMP(NANOS), which needs nanosAsLong + a long
-# schema converted right after (see _stream_events).
-EVENTS_RAW_SCHEMA = _events_raw_schema(T.TimestampType())
+from simple_etl_pipeline_spark.schemas import events_ts_type, read_events
 
 
 def _stream_events(
     spark: SparkSession, directory: str, unit_dir: str, glob: str, **options
 ) -> DataFrame:
-    """File-stream reader over events parquet, robust to the ts physical
-    unit of the testdata generation (micros now, nanos historically).
-    unit_dir is the sf_dir whose events.parquet determines the unit —
-    sentinel staging dirs copy that file, so they share its unit."""
-    from simple_etl_pipeline_spark.schemas import _events_ts_is_nanos
-
-    reader = spark.readStream.option("pathGlobFilter", glob)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    if _events_ts_is_nanos(unit_dir):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = reader.schema(_events_raw_schema(T.LongType())).parquet(directory)
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return reader.schema(EVENTS_RAW_SCHEMA).parquet(directory)
+    """File-stream reader over events parquet. unit_dir is the sf_dir
+    whose events table sets the ts unit (schemas.read_events) — sentinel
+    staging dirs copy that table, so they share its unit."""
+    reader = spark.readStream.options(pathGlobFilter=glob, **options)
+    return read_events(spark, reader, unit_dir, directory)
 
 
 def _table_stream_source(sf_dir: str, table: str) -> tuple[str, str]:
@@ -267,6 +240,7 @@ def st_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentinel's own session is withheld by its own watermark regardless
     (its close = sentinel + gap, watermark = sentinel - delay).
     """
+    import fnmatch
     import os
     import shutil
     import tempfile
@@ -276,32 +250,22 @@ def st_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     staging = tempfile.mkdtemp(prefix="st_session_sentinel_")
     try:
-        src = os.path.join(sf_dir, "events.parquet")
-        if os.path.isdir(src):
-            # Spark-written table: a DIRECTORY of part files (the probe
-            # and any real deployment); stage every data file flat so
-            # the one *.parquet glob below reads them with the sentinel
-            for i, name in enumerate(sorted(os.listdir(src))):
-                if name.endswith(".parquet"):
-                    shutil.copy2(
-                        os.path.join(src, name),
-                        os.path.join(staging, f"events_{i:05d}.parquet"),
-                    )
-        else:
-            shutil.copy2(src, os.path.join(staging, "events.parquet"))
-        from simple_etl_pipeline_spark.schemas import _events_ts_is_nanos
-
-        # The sentinel file's ts unit must match the copied real file so
-        # one declared stream schema reads both (nanos surfaces as long
-        # under nanosAsLong; micros reads as a plain timestamp).
-        if _events_ts_is_nanos(sf_dir):
-            ts_arr = pa.array([_SENTINEL_EPOCH * 10**9], pa.int64())
-        else:
-            ts_arr = pa.array([_SENTINEL_EPOCH * 10**6], pa.timestamp("us"))
+        # stage every events data file flat (the testdata file, or the
+        # part files of a Spark-written table) so one glob reads them
+        # together with the sentinel
+        directory, glob = _table_stream_source(sf_dir, "events")
+        for i, name in enumerate(sorted(fnmatch.filter(os.listdir(directory), glob))):
+            shutil.copy2(
+                os.path.join(directory, name),
+                os.path.join(staging, f"events_{i:05d}.parquet"),
+            )
+        # The sentinel's ts is stored in the staged files' type, so one
+        # declared stream schema reads both.
+        ts_arr = pa.array([_SENTINEL_EPOCH], pa.timestamp("s"))
         sentinel = pa.table(
             {
                 "event_id": pa.array([-1], pa.int64()),
-                "ts": ts_arr,
+                "ts": ts_arr.cast(events_ts_type(sf_dir)),
                 "user_id": pa.array([-1], pa.int64()),
                 "event_type": pa.array(["sentinel"], pa.string()),
                 "value": pa.array([0.0], pa.float64()),

@@ -483,7 +483,7 @@ def stage_time_ordered_events(
     out = os.path.join(staging_dir, "events.parquet")
     # Pin the parquet timestamp encoding: only session.get_spark sets
     # this, and under a harness-provided session Spark's default INT96
-    # would make _events_ts_is_nanos misread the staging dir (ADVICE
+    # would make schemas.events_ts_type misread the staging dir (ADVICE
     # r7) — runtime-settable, mirroring load_table's timeZone pin.
     spark.conf.set(
         "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"

@@ -5,6 +5,7 @@ import os
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
+os.environ.setdefault("SPARK_DRIVER_MEMORY", "2g")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 

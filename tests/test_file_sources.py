@@ -141,19 +141,29 @@ def test_read_binary_files(spark, tmp_path):
 
 
 def test_events_ts_unit_is_read_from_the_current_file(spark, tmp_path):
-    """load_table reads events.ts by the unit the file holds NOW: a
-    directory rewritten in place from TIMESTAMP(NANOS) to
-    TIMESTAMP(MICROS) must not be read with the old unit (that shifts
-    every epoch by 1000x, or fails the read)."""
+    """load_table, the events stream and the session-window sentinel
+    read events.ts by the unit the file holds NOW: a directory rewritten
+    in place from TIMESTAMP(NANOS) to TIMESTAMP(MICROS) must not be read
+    with the old unit (that shifts every epoch by 1000x, or fails the
+    read)."""
+    import calendar
     import datetime as dt
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from simple_etl_pipeline_spark.schemas import load_table
+    from simple_etl_pipeline_spark.streaming.events import (
+        _run_to_memory,
+        read_events_stream,
+        st_session_windows,
+    )
 
     ts = [dt.datetime(2024, 1, 1, 0, 0, 1), dt.datetime(2024, 3, 5, 12, 30)]
     path = tmp_path / "events.parquet"
+    # compared as UTC text, so the driver's local zone cannot shift it
+    as_text = F.date_format("ts", "yyyy-MM-dd HH:mm:ss")
+    want = [t.strftime("%Y-%m-%d %H:%M:%S") for t in ts]
     for unit in ("ns", "us"):
         pq.write_table(
             pa.table(
@@ -169,11 +179,13 @@ def test_events_ts_unit_is_read_from_the_current_file(spark, tmp_path):
             path,
         )
         back = load_table(spark, str(tmp_path), "events", parallelize=False)
-        # compared as UTC text, so the driver's local zone cannot shift it
-        got = sorted(
-            r[0]
-            for r in back.select(
-                F.date_format("ts", "yyyy-MM-dd HH:mm:ss")
-            ).collect()
-        )
-        assert got == [t.strftime("%Y-%m-%d %H:%M:%S") for t in ts], unit
+        assert sorted(r[0] for r in back.select(as_text).collect()) == want, unit
+        stream = read_events_stream(spark, str(tmp_path))
+        streamed = _run_to_memory(stream.select(as_text), "append")
+        assert sorted(r[0] for r in streamed.collect()) == want, unit
+        # one event per user: each session starts at that user's event
+        sessions = st_session_windows(spark, str(tmp_path)).collect()
+        assert sorted((r.user_id, r.session_start) for r in sessions) == [
+            (7, calendar.timegm(ts[0].timetuple())),
+            (8, calendar.timegm(ts[1].timetuple())),
+        ], unit

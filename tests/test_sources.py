@@ -74,6 +74,65 @@ def test_ingest_html_files(spark, tmp_path):
     ]
 
 
+def test_fetch_pages_writes_served_pages_for_ingest(spark, tmp_path):
+    """fetch_pages crawls page 1 at the bare base URL and page N at
+    {base}/pageN, skips a page that fails (404), and writes the rest
+    where ingest_html_files reads them; it refuses a directory that
+    exists, so no page of an earlier crawl is read. Served from
+    loopback only."""
+    import threading
+
+    import pytest
+    from http.server import BaseHTTPRequestHandler, HTTPServer
+
+    from simple_etl_pipeline_spark.sources.scrape import fetch_pages
+
+    served = {
+        "/": CARD_HTML.replace("Test Product", "Page 1 Product"),
+        "/page3": CARD_HTML.replace("Test Product", "Page 3 Product"),
+    }
+    requested = []
+
+    class Handler(BaseHTTPRequestHandler):
+        def do_GET(self):
+            requested.append(self.path)
+            body = served.get(self.path)
+            if body is None:
+                self.send_error(404)
+                return
+            data = f"<html><body>{body}</body></html>".encode()
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(data)))
+            self.end_headers()
+            self.wfile.write(data)
+
+        def log_message(self, *args):
+            pass
+
+    server = HTTPServer(("127.0.0.1", 0), Handler)
+    thread = threading.Thread(target=server.serve_forever, daemon=True)
+    thread.start()
+    try:
+        out = tmp_path / "pages"
+        written = fetch_pages(
+            str(out),
+            base_url=f"http://127.0.0.1:{server.server_port}",
+            total_pages=3,
+            delay_seconds=0,
+        )
+        with pytest.raises(FileExistsError):
+            fetch_pages(str(out), base_url="http://127.0.0.1:1", total_pages=1)
+    finally:
+        server.shutdown()
+        server.server_close()
+    assert requested == ["/", "/page2", "/page3"]
+    on_disk = sorted(out.iterdir())
+    assert [p.name for p in on_disk] == ["page1.html", "page3.html"]
+    assert sorted(written) == [str(p) for p in on_disk]
+    df = ingest_html_files(spark, str(out))
+    assert sorted(r.title for r in df.collect()) == ["Page 1 Product", "Page 3 Product"]
+
+
 def test_jdbc_reader_config(spark):
     import pytest as _pytest
 

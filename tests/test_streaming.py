@@ -77,14 +77,12 @@ def test_checkpoint_incremental_resume(spark, sf_dir, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from simple_etl_pipeline_spark.streaming.events import EVENTS_RAW_SCHEMA
+    from simple_etl_pipeline_spark.schemas import TABLE_SCHEMAS, load_table
 
     src = tmp_path / "src"
     sink = tmp_path / "sink"
     ckpt = tmp_path / "ckpt"
     src.mkdir()
-
-    from simple_etl_pipeline_spark.schemas import load_table
 
     events = load_table(spark, sf_dir, "events")
     half1 = events.filter(F.col("event_id") % 2 == 0)
@@ -100,7 +98,9 @@ def test_checkpoint_incremental_resume(spark, sf_dir, tmp_path):
     def _run_once():
         # Staged files are Spark-written (ts is TIMESTAMP_MICROS), so the
         # declared timestamp schema reads them directly.
-        stream = spark.readStream.schema(EVENTS_RAW_SCHEMA).parquet(str(src))
+        stream = spark.readStream.schema(TABLE_SCHEMAS["events"]).parquet(
+            str(src)
+        )
         q = (
             stream.writeStream.format("parquet")
             .option("path", str(sink))
