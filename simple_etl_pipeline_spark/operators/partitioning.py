@@ -103,14 +103,6 @@ def compact_partitions(
     )
 
 
-def explain_formatted(df: DataFrame) -> str:
-    """Formatted physical plan as a string (what ``.explain`` prints)."""
-    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    return df._jdf.queryExecution().explainString(mode)
-
-
 def zorder_key(a, b, bits: int = 16):
     """Morton (Z-order) key: bit-interleave two non-negative ints.
 

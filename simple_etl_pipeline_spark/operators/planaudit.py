@@ -5,16 +5,22 @@ at 100 TB:
 
 - no CartesianProduct (quadratic execution);
 - no non-Cross BroadcastNestedLoopJoin (a join that found no equi keys);
+- every Cross BroadcastNestedLoopJoin broadcasts a row-bounded frame
+  (:func:`scalar_bnlj_violations`);
 - no row-at-a-time Python UDF on the data path (BatchEvalPython —
   Arrow-batched pandas UDFs show as ArrowEvalPython and are allowed);
 - optionally: a filter actually pushed to the scan, a bounded number
   of shuffles, a scan pruned to an expected column count.
 
-The audit reads the FORMATTED physical plan string — the same evidence
-PLANS.md records — so a finding cites the offending node verbatim.
-This runs at plan time (no job is executed) and costs milliseconds:
-the cheap pre-flight a scheduled 100 TB job wants, because the
-alternative is discovering the cartesian product three hours in.
+The node-name and budget rules read the FORMATTED physical plan string
+— the same evidence PLANS.md records — so a finding cites the offending
+node verbatim. The nested-loop bound needs parent/child structure, so
+it walks the JVM SparkPlan tree instead, which holds the same on a
+fresh frame and on one whose plan (or a cached frame it reads) has
+already run. This runs at plan time (no job is executed) and costs
+milliseconds to a few hundred: the cheap pre-flight a scheduled 100 TB
+job wants, because the alternative is discovering the cartesian
+product three hours in.
 """
 
 from __future__ import annotations
@@ -89,58 +95,59 @@ def plan_fingerprint(df: DataFrame) -> str:
 
 
 # Row-count-preserving (or row-count-REDUCING) single-child nodes: if
-# every node between a BroadcastExchange and its bounding aggregate is
-# in this set, the broadcast frame has at most the aggregate's output
+# every node between a BroadcastExchangeExec and its bounding aggregate
+# is in this set, the broadcast frame has at most the aggregate's output
 # rows. Joins / Generate / Expand / Union are deliberately absent —
-# they can multiply rows, so hitting one is an audit failure.
-_ROW_BOUND_PRESERVING = {
-    "BroadcastExchange",
-    "Exchange",
-    "AQEShuffleRead",
-    "ShuffleQueryStage",
-    "BroadcastQueryStage",
-    "TableCacheQueryStage",
-    "ResultQueryStage",
-    "Project",
-    "Filter",
-    "Sort",
-    "Coalesce",
-    "ColumnarToRow",
-    "RowToColumnar",
+# they can multiply rows, so hitting one is an audit failure. The AQE
+# and cache wrappers are here too: :func:`_children` looks through
+# each to the one plan it wraps.
+_ROW_BOUND_PRESERVING = frozenset({
+    "BroadcastExchangeExec",
+    "ShuffleExchangeExec",
+    "ReusedExchangeExec",
+    "AQEShuffleReadExec",
+    "ShuffleQueryStageExec",
+    "BroadcastQueryStageExec",
+    "TableCacheQueryStageExec",
+    "ResultQueryStageExec",
+    "ProjectExec",
+    "FilterExec",
+    "SortExec",
+    "CoalesceExec",
+    "ColumnarToRowExec",
+    "RowToColumnarExec",
     "InputAdapter",
-    "WholeStageCodegen",
-    "AdaptiveSparkPlan",
-    "Subquery",
-    "GlobalLimit",
-    "LocalLimit",
-    "TakeOrderedAndProject",
-    # cache substitution wrappers (a rebuilt query whose subtree is
-    # persisted): both preserve the cached plan's rows and the
-    # formatted explain expands the relation beneath them
-    "InMemoryTableScan",
-    "InMemoryRelation",
-}
+    "WholeStageCodegenExec",
+    "AdaptiveSparkPlanExec",
+    "SubqueryExec",
+    "GlobalLimitExec",
+    "LocalLimitExec",
+    "TakeOrderedAndProjectExec",
+    "InMemoryTableScanExec",
+})
 
-_AGGREGATES = {"HashAggregate", "SortAggregate", "ObjectHashAggregate"}
+_AGGREGATES = frozenset(
+    {"HashAggregateExec", "SortAggregateExec", "ObjectHashAggregateExec"}
+)
 
 # Leaves that are constant-size by construction (driver-side literal
 # rows), so a broadcast built purely over them is bounded without an
-# aggregate. "Scan ExistingRDD" is a createDataFrame literal in this
-# engine: the data path is exclusively parquet + derived frames (the
-# no-.rdd/no-.collect rule, pinned by the repo grep audits), so the
-# only RDD-backed scans are driver-literal parameter frames (e.g. the
-# percentile list ev_quantile_sketch probes with).
-_CONSTANT_LEAVES = {"LocalTableScan", "Scan ExistingRDD"}
+# aggregate. RDDScanExec ("Scan ExistingRDD") is a createDataFrame
+# literal in this engine: the data path is exclusively parquet +
+# derived frames (the no-.rdd/no-.collect rule, pinned by the repo grep
+# audits), so the only RDD-backed scans are driver-literal parameter
+# frames (e.g. the percentile list ev_quantile_sketch probes with).
+_CONSTANT_LEAVES = frozenset({"LocalTableScanExec", "RDDScanExec"})
 
 # Primary-key columns of the testdata tables (schemas.py), unique by
 # construction (pinned by the schema registry and the corpus
-# generators; dedup_exact et al. depend on the same fact). Two textual
-# bounds follow:
-#   - a Filter conjunct `pk < literal` / `pk IN (list)` bounds output
-#     rows by the literal / list size (the N_QUERIES query-vector
-#     broadcasts of the similarity family);
+# generators; dedup_exact et al. depend on the same fact). Two bounds
+# follow:
+#   - a Filter conjunct `pk < literal` / `pk <= literal` /
+#     `pk IN (literals)` bounds output rows by the literal / list size
+#     (the N_QUERIES query-vector broadcasts of the similarity family);
 #   - a BroadcastHashJoin whose RIGHT keys are all pks matches at most
-#     one build row per probe row, so LeftOuter/Inner output is
+#     one right row per left row, so LeftOuter/Inner output is
 #     bounded by the (bounded) left side (train_hard_negatives'
 #     anchor-source decoration).
 UNIQUE_ID_COLUMNS = frozenset({"vec_id", "doc_id"})
@@ -166,271 +173,139 @@ UNIQUE_ID_COLUMNS = frozenset({"vec_id", "doc_id"})
 K_BOUNDED_KEYS = frozenset({"c_label", "c_id", "code", "event_type"})
 
 
-def _summary_nodes(plan: str) -> list[tuple[int, str, int]]:
-    """Parse the formatted plan's summary tree into (col, name, id)
-    triples in pre-order. col is the node's column in the tree art
-    (direct children sit at col + 3), name has the codegen '* ' marker
-    stripped, id is the '(N)' detail-section key."""
-    import re
-
-    out: list[tuple[int, str, int]] = []
-    for ln in plan.splitlines():
-        if ln.startswith("=="):
-            continue
-        if not ln.strip():
-            break  # end of the summary section
-        # AQE query-stage nodes carry trailing ", Statistics(...)"
-        # after the id — tolerate it, or the stage node drops out of
-        # the parsed tree and its child's column no longer reads as
-        # parent+3 (the round-15 cached-semdedup find)
-        m = re.search(r"\((\d+)\)(?:, Statistics\(.*\))?\s*$", ln)
-        if not m:
-            continue
-        stripped = re.sub(r"^[\s:+\-]*", "", ln)
-        col = len(ln) - len(stripped)
-        name = stripped[2:] if stripped.startswith("* ") else stripped
-        out.append((col, name, int(m.group(1))))
-    return out
+def _name(jobj) -> str:
+    return jobj.getClass().getSimpleName()
 
 
-def _detail_sections(plan: str) -> dict[int, str]:
-    """Map node id -> its '(N) NodeName\\n...' detail segment."""
-    import re
-
-    out: dict[int, str] = {}
-    for seg in re.split(r"\n\n+", plan):
-        m = re.match(r"\((\d+)\) ", seg.strip())
-        if m:
-            out[int(m.group(1))] = seg.strip()
-    return out
+def _seq(seq) -> list:
+    """A Scala Seq of JVM objects as a Python list."""
+    return [seq.apply(i) for i in range(seq.size())]
 
 
-def scalar_bnlj_violations(plan: str) -> list[str]:
-    """VERDICT r14 watch-item #3: every BroadcastNestedLoopJoin in a
-    FORMATTED plan must broadcast a provably row-bounded frame, so the
-    repo's approved-BNLJ count can never silently absorb a non-scalar
-    nested-loop join. The build-side subtree passes iff, descending
-    from the join's build child through row-count-preserving nodes
-    only, it reaches either
+def _children(node, name: str) -> list:
+    """The plan nodes under a physical plan node. The wrappers hold
+    their plan outside ``children()``: an AQE plan its current plan, a
+    query stage its stage plan, a cached-relation scan the cache's plan
+    and a reused exchange the exchange it reuses."""
+    if name == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if name.endswith("QueryStageExec"):
+        return [node.plan()]
+    if name == "InMemoryTableScanExec":
+        return [node.relation().cachedPlan()]
+    if name == "ReusedExchangeExec":
+        return [node.child()]
+    return _seq(node.children())
 
-    - an aggregate with ``Keys: []`` (exactly one output row — the
+
+def _attr_name(expr) -> str | None:
+    return expr.name() if _name(expr) == "AttributeReference" else None
+
+
+def _bounds_unique_id(cond) -> bool:
+    """True iff a conjunct of a filter condition bounds a
+    :data:`UNIQUE_ID_COLUMNS` column by literals."""
+    name = _name(cond)
+    if name == "And":
+        return _bounds_unique_id(cond.left()) or _bounds_unique_id(cond.right())
+    if name in ("LessThan", "LessThanOrEqual"):
+        return (
+            _attr_name(cond.left()) in UNIQUE_ID_COLUMNS
+            and _name(cond.right()) == "Literal"
+        )
+    if name == "InSet":
+        return _attr_name(cond.child()) in UNIQUE_ID_COLUMNS
+    if name == "In":
+        return _attr_name(cond.value()) in UNIQUE_ID_COLUMNS and all(
+            _name(e) == "Literal" for e in _seq(cond.list())
+        )
+    return False
+
+
+def _bound_violation(node) -> str | None:
+    """None if the plan under ``node`` outputs provably row-bounded
+    rows, else the reason."""
+    while True:
+        name = _name(node)
+        if name in _AGGREGATES:
+            keys = {e.name() for e in _seq(node.groupingExpressions())}
+            if keys <= K_BOUNDED_KEYS:
+                return None
+            return (
+                f"keyed aggregate ({name} keys {sorted(keys)}) — "
+                "data-dependent rows"
+            )
+        if name in _CONSTANT_LEAVES:
+            return None
+        if name == "FilterExec" and _bounds_unique_id(node.condition()):
+            # the subtree below is then irrelevant to the bound
+            return None
+        if name == "BroadcastHashJoinExec":
+            jtype = node.joinType().toString()
+            left_ok = _bound_violation(node.left())
+            if jtype in ("LeftSemi", "LeftAnti"):
+                return left_ok  # never exceeds the left side
+            rkeys = {_attr_name(k) for k in _seq(node.rightKeys())}
+            if jtype in ("LeftOuter", "Inner") and rkeys <= UNIQUE_ID_COLUMNS:
+                return left_ok  # at most one right match per left row
+            return f"join in build subtree not provably row-bounded: {name} ({jtype})"
+        if name == "BroadcastNestedLoopJoinExec":
+            # a cross of two bounded frames is bounded
+            return _bound_violation(node.left()) or _bound_violation(node.right())
+        if name not in _ROW_BOUND_PRESERVING:
+            return f"non-row-bounded node in build subtree: {name}"
+        (node,) = _children(node, name)
+
+
+def scalar_bnlj_violations(df: DataFrame) -> list[str]:
+    """Every BroadcastNestedLoopJoin in a DataFrame's physical plan must
+    broadcast a provably row-bounded frame, so the repo's approved-BNLJ
+    count can never silently absorb a non-scalar nested-loop join. The
+    build side passes iff, descending through row-count-preserving
+    nodes only, it reaches either
+
+    - an aggregate with no grouping keys (exactly one output row — the
       scalar-statistic broadcast the approved carriers use),
     - an aggregate whose every key is in :data:`K_BOUNDED_KEYS` (a
       documented compile-time-constant domain, at most K rows — the
       k-means centroid-array broadcast),
-    - a constant leaf (``LocalTableScan`` — driver-side literal rows),
+    - a constant leaf (driver-side literal rows),
+    - a filter bounding a :data:`UNIQUE_ID_COLUMNS` column by literals,
+      or a join that cannot exceed its bounded left side,
     - or a nested BNLJ BOTH of whose children are bounded (a cross of
       two constant-size frames is constant-size).
 
     Anything else — a keyed aggregate over a data-dependent domain, a
     Generate/Union/multiplying join inside the build subtree, a bare
     parquet scan — is reported. Returns one message per violating BNLJ
-    node id (a shared subtree printed multiple times by the formatted
-    explain is reported once; empty == every nested-loop broadcast is
-    row-bounded). Operates on the formatted plan TEXT so tools
-    (plan_dump) can audit without rebuilding DataFrames.
+    (empty == every nested-loop broadcast is row-bounded).
 
-    Specified for FRESH builds, the same convention as
-    :func:`plan_fingerprint`: when the session's cache manager splices
-    an EXECUTED persisted frame into the plan, the InMemoryRelation
-    re-prints that cache's AdaptiveSparkPlan with ``== Final Plan ==``
-    / ``== Initial Plan ==`` sections (``== Current Plan ==`` while
-    that plan is not finalized) whose indentation RESTARTS at an
-    unrelated column (and nested splices interleave), so the tree-art
-    containment arithmetic below stops meaning parent/child from the
-    first such marker on (r16 find: a suite-ordering cache hit turned
-    sim_ivfpq_topk's two scalar cross joins into phantom
-    "expected 2 children" findings). Nodes printed after the first
-    marker are therefore out of audit scope — they are either the
-    splice's provenance plan (audited when the fresh build that
-    created the cache was audited; a cache hit never re-executes it)
-    or outer nodes whose child columns are no longer trustworthy.
-    A plan whose every BNLJ lies out of scope gets one "plan out of
-    audit scope" message instead of an all-clear. Fresh plans contain
-    no such markers and keep full coverage."""
-    import re
-
-    nodes = _summary_nodes(plan)
-    details = _detail_sections(plan)
+    The audit walks the JVM SparkPlan tree (``executedPlan()``), not
+    explain text, so it reads fresh and executed frames alike: it looks
+    through AQE plans, query stages, cached relations (the cache's own
+    plan, executed or not) and reused exchanges (the reuse source
+    itself). A node reached by more than one path is audited once."""
     out: list[str] = []
-
-    # Index of the first node rendered at/after an executed-cache
-    # section marker; len(nodes) (everything reliable) when none.
-    n_reliable = len(nodes)
-    _cnt = 0
-    for ln in plan.splitlines():
-        if ln.startswith("=="):
-            continue
-        if not ln.strip():
-            break
-        if re.match(r"^[\s:+\-]*== (?:Final|Initial|Current) Plan ==\s*$", ln):
-            n_reliable = _cnt
-            break
-        if re.search(r"\((\d+)\)(?:, Statistics\(.*\))?\s*$", ln):
-            _cnt += 1
-
-    def subtree(i: int) -> list[int]:
-        col = nodes[i][0]
-        j = i + 1
-        idx = []
-        while j < len(nodes) and nodes[j][0] > col:
-            idx.append(j)
-            j += 1
-        return idx
-
-    def direct_children(i: int) -> list[int]:
-        col = nodes[i][0]
-        return [j for j in subtree(i) if nodes[j][0] == col + 3]
-
-    def check_build(i: int) -> str | None:
-        """None if bounded, else the reason."""
-        import re
-
-        cur = i
-        while True:
-            col, name, nid = nodes[cur]
-            head = name.split(" ")[0].split("(")[0]
-            if head in _AGGREGATES:
-                det = details.get(nid, "")
-                if "Keys: []" in det or "Keys []" in det:
-                    return None
-                m = re.search(r"Keys \[\d+\]: \[([^\]]*)\]", det)
-                if m:
-                    keys = {
-                        k.strip().split("#")[0]
-                        for k in m.group(1).split(",")
-                    }
-                    if keys and keys <= K_BOUNDED_KEYS:
-                        return None
-                return f"keyed aggregate ({name}) — data-dependent rows"
-            if any(name.startswith(leaf) for leaf in _CONSTANT_LEAVES):
-                return None
-            if head == "Filter":
-                # a conjunct bounding a unique-id column by a literal
-                # bounds output rows by that literal — the N_QUERIES
-                # query-vector broadcast shape; the subtree below is
-                # then irrelevant to the bound
-                cond = details.get(nid, "")
-                for col_name in re.findall(
-                    r"(\w+)#\d+L? (?:<|<=) \d+", cond
-                ) + re.findall(r"(\w+)#\d+L? IN \(", cond):
-                    if col_name in UNIQUE_ID_COLUMNS:
-                        return None
-                # not bounding — fall through as a pass-through node
-            if head == "BroadcastHashJoin":
-                det = details.get(nid, "")
-                jt = re.search(r"Join type: (\w+)", det)
-                jtype = jt.group(1) if jt else ""
-                kids = direct_children(cur)
-                if len(kids) != 2:
-                    return f"{name} has {len(kids)} children"
-                left_ok = check_build(kids[0])
-                if jtype in ("LeftSemi", "LeftAnti"):
-                    return left_ok  # never exceeds the left side
-                rk = re.search(r"Right keys \[\d+\]: \[([^\]]*)\]", det)
-                rkeys = (
-                    {k.strip().split("#")[0] for k in rk.group(1).split(",")}
-                    if rk
-                    else set()
-                )
-                if (
-                    jtype in ("LeftOuter", "Inner")
-                    and rkeys
-                    and rkeys <= UNIQUE_ID_COLUMNS
-                ):
-                    # unique right key: at most one match per probe row
-                    return left_ok
-                return (
-                    f"join in build subtree not provably row-bounded: "
-                    f"{name} ({jtype})"
-                )
-            if head == "BroadcastNestedLoopJoin":
-                kids = direct_children(cur)
-                if len(kids) == 2:
-                    w1, w2 = check_build(kids[0]), check_build(kids[1])
-                    if w1 is None and w2 is None:
-                        return None
-                    return w1 or w2
-                return f"{name} has {len(kids)} children"
-            if head == "ReusedExchange":
-                # resolve the reuse source by OUTPUT COLUMN NAMES: a
-                # candidate exchange counts only when its detail lists
-                # the same column-name set (expression ids stripped)
-                # AND its own subtree bounds — matching "any bounded
-                # exchange anywhere" would let an unbounded reuse hide
-                # behind an unrelated scalar broadcast.
-                det = details.get(nid, "")
-                m = re.search(r"Output \[\d+\]: \[([^\]]*)\]", det)
-                want = (
-                    {c.strip().split("#")[0] for c in m.group(1).split(",")}
-                    if m
-                    else None
-                )
-                # only pre-splice exchanges: a spliced one's subtree
-                # columns are meaningless, so it proves no bound
-                for j, (_c, n2, id2) in enumerate(nodes[:n_reliable]):
-                    if j == cur or n2.split(" ")[0] not in (
-                        "BroadcastExchange",
-                        "Exchange",
-                    ):
-                        continue
-                    if want is not None:
-                        d2 = details.get(id2, "")
-                        m2 = re.search(r"Input \[\d+\]: \[([^\]]*)\]", d2)
-                        got = (
-                            {
-                                c.strip().split("#")[0]
-                                for c in m2.group(1).split(",")
-                            }
-                            if m2
-                            else None
-                        )
-                        if got != want:
-                            continue
-                    if check_build(j) is None:
-                        return None
-                return "ReusedExchange with no bounded source exchange"
-            if head not in _ROW_BOUND_PRESERVING:
-                return f"non-row-bounded node in build subtree: {name}"
-            kids = direct_children(cur)
-            if len(kids) != 1:
-                return (
-                    f"{name} has {len(kids)} children — cannot bound rows"
-                )
-            cur = kids[0]
-
     seen: set[int] = set()
-    audited = 0
-    for i, (_col, name, nid) in enumerate(nodes):
-        if not name.startswith("BroadcastNestedLoopJoin") or nid in seen:
-            continue
-        seen.add(nid)
-        if i >= n_reliable:
-            continue  # inside an executed-cache splice — see docstring
-        # A subtree that ends exactly at the cut is indistinguishable
-        # from one the splice truncated (its indentation restarted at or
-        # left of this node's column): treat it as crossing too.
-        end = i + len(subtree(i)) + 1
-        crosses_cut = end > n_reliable or end == n_reliable < len(nodes)
-        kids = direct_children(i)
-        if len(kids) != 2:
-            if crosses_cut:
-                continue  # child columns corrupted by the splice
-            out.append(f"BNLJ ({nid}): expected 2 children, saw {len(kids)}")
-            audited += 1
-            continue
-        build = kids[1] if "BuildRight" in name else kids[0]
-        why = check_build(build)
-        if why is not None and crosses_cut:
-            continue  # descent entered the spliced region
-        audited += 1
-        if why is not None:
-            out.append(f"BNLJ ({nid}) build side not scalar-bounded: {why}")
-    if seen and not audited:
-        return [
-            f"plan out of audit scope: all {len(seen)} BNLJ node(s) sit in "
-            "executed AQE sections; audit a fresh build"
-        ]
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = _name(node)
+        # a query stage's id() is its stage number, not a plan id; the
+        # stage plan it wraps is visited (and deduplicated) next
+        if not name.endswith("QueryStageExec"):
+            if node.id() in seen:
+                continue
+            seen.add(node.id())
+        if name == "BroadcastNestedLoopJoinExec":
+            right = node.buildSide().toString() == "BuildRight"
+            why = _bound_violation(node.right() if right else node.left())
+            if why is not None:
+                out.append(
+                    f"BNLJ (plan id {node.id()}) build side not "
+                    f"scalar-bounded: {why}"
+                )
+        stack.extend(reversed(_children(node, name)))
     return out
 
 
@@ -488,7 +363,7 @@ def audit_plan(
         # every surviving (Cross) BNLJ must broadcast a scalar-bounded
         # frame — the rule that keeps the approved-carrier count from
         # silently absorbing a non-scalar nested-loop join
-        out.findings.extend(scalar_bnlj_violations(plan))
+        out.findings.extend(scalar_bnlj_violations(df))
 
     if forbid_python_row_udf and "BatchEvalPython" in plan:
         out.findings.append(

@@ -18,6 +18,22 @@ _MODE_MAP = {"fail": "errorifexists", "replace": "overwrite", "append": "append"
 REQUIRED_PARAMS = ("host", "database", "user", "password")
 
 
+def connection_options(connection_params: dict) -> dict[str, str]:
+    """Validated url/user/password/driver options for a PostgreSQL JDBC
+    connection, shared by this sink and the JDBC source."""
+    missing = [p for p in REQUIRED_PARAMS if not connection_params.get(p)]
+    if missing:
+        raise sinks.LoadError(f"missing connection params: {missing}")
+    port = connection_params.get("port", 5432)
+    return {
+        "url": f"jdbc:postgresql://{connection_params['host']}:{port}/"
+        f"{connection_params['database']}",
+        "user": connection_params["user"],
+        "password": connection_params["password"],
+        "driver": "org.postgresql.Driver",
+    }
+
+
 def build_jdbc_writer(
     df: DataFrame,
     table_name: str,
@@ -29,23 +45,16 @@ def build_jdbc_writer(
 ):
     """Validate params and return the configured writer (separated from
     .save() so tests can check the config without a database)."""
-    missing = [p for p in REQUIRED_PARAMS if not connection_params.get(p)]
-    if missing:
-        raise sinks.LoadError(f"missing connection params: {missing}")
+    connection = connection_options(connection_params)
     if if_exists not in _MODE_MAP:
         raise sinks.LoadError(f"if_exists must be one of {sorted(_MODE_MAP)}")
-    port = connection_params.get("port", 5432)
-    url = f"jdbc:postgresql://{connection_params['host']}:{port}/{connection_params['database']}"
     out = df
     if num_partitions is not None and df.rdd.getNumPartitions() > num_partitions:
         out = df.coalesce(num_partitions)  # bound DB connections
     return (
         out.write.format("jdbc")
-        .option("url", url)
+        .options(**connection)
         .option("dbtable", f"{schema}.{table_name}")
-        .option("user", connection_params["user"])
-        .option("password", connection_params["password"])
-        .option("driver", "org.postgresql.Driver")
         .option("batchsize", str(batchsize))
         .mode(_MODE_MAP[if_exists])
     )

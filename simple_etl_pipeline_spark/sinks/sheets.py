@@ -32,7 +32,9 @@ def save_to_google_sheets(
     client_factory=None,
 ) -> str:
     """Write df to a worksheet; returns the spreadsheet URL."""
-    if df.isEmpty():
+    # one job: one row past the cap is enough to tell an over-cap result
+    pdf = df.limit(MAX_SHEET_ROWS + 1).toPandas()
+    if pdf.empty:
         raise sinks.EmptyOutputError("cannot save empty DataFrame to Google Sheets")
 
     if client_factory is None:
@@ -46,12 +48,11 @@ def save_to_google_sheets(
         def client_factory():
             return gspread.service_account(filename=credentials_path, scopes=SCOPES)
 
-    n_rows = df.count()
-    if n_rows > MAX_SHEET_ROWS:
+    if len(pdf) > MAX_SHEET_ROWS:
         raise sinks.LoadError(
-            f"result has {n_rows} rows; Sheets sink is capped at {MAX_SHEET_ROWS}"
+            f"result has more than {MAX_SHEET_ROWS} rows; "
+            f"Sheets sink is capped at {MAX_SHEET_ROWS}"
         )
-    pdf = df.toPandas()
 
     try:
         client = client_factory()

@@ -16,8 +16,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 import simple_etl_pipeline_spark.sinks as sinks
-
-REQUIRED_PARAMS = ("host", "database", "user", "password")
+from simple_etl_pipeline_spark.sinks.jdbc import connection_options
 
 
 def jdbc_reader_options(
@@ -32,24 +31,13 @@ def jdbc_reader_options(
 ) -> dict[str, str]:
     """Validated option map for a JDBC read (pure — unit-testable
     without a database or a session)."""
-    missing = [p for p in REQUIRED_PARAMS if not connection_params.get(p)]
-    if missing:
-        raise sinks.LoadError(f"missing connection params: {missing}")
+    opts = connection_options(connection_params)
     if partition_column is not None and (lower_bound is None or upper_bound is None):
         raise sinks.LoadError(
             "partition_column requires lower_bound and upper_bound "
             "(e.g. SELECT min(pk), max(pk) beforehand)"
         )
-    port = connection_params.get("port", 5432)
-    opts = {
-        "url": f"jdbc:postgresql://{connection_params['host']}:{port}/"
-        f"{connection_params['database']}",
-        "dbtable": f"{schema}.{table_name}",
-        "user": connection_params["user"],
-        "password": connection_params["password"],
-        "driver": "org.postgresql.Driver",
-        "fetchsize": str(fetchsize),
-    }
+    opts.update(dbtable=f"{schema}.{table_name}", fetchsize=str(fetchsize))
     if partition_column is not None:
         opts.update(
             partitionColumn=partition_column,

@@ -14,11 +14,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from simple_etl_pipeline_spark.operators.partitioning import (
-    explain_formatted,
     overwrite_day,
     read_events_day,
     write_events_by_date,
 )
+from simple_etl_pipeline_spark.operators.planaudit import formatted_plan
 from simple_etl_pipeline_spark.schemas import load_table
 
 
@@ -43,7 +43,7 @@ def _some_day(spark, sf_dir) -> str:
 
 def test_partition_filter_in_plan(spark, sf_dir, events_path):
     day = _some_day(spark, sf_dir)
-    plan = explain_formatted(read_events_day(spark, events_path, day))
+    plan = formatted_plan(read_events_day(spark, events_path, day))
     assert "PartitionFilters" in plan
     # The predicate must live in PartitionFilters (directory pruning),
     # not only in the data-filter section.

@@ -1457,16 +1457,16 @@ def test_knn_components_no_cartesian_no_python(spark, sf_dir):
     evaluation anywhere in the converged plan; nested-loop joins are
     only the 1-row bucket-bit parameter broadcasts (one per side of
     the mutuality semi-join — the adjudicated bounds-scalar class)."""
+    from simple_etl_pipeline_spark.operators.planaudit import (
+        scalar_bnlj_violations,
+    )
     from simple_etl_pipeline_spark.plans import similarity as simmod
 
-    plan = (
-        simmod.sim_knn_components(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    df = simmod.sim_knn_components(spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastNestedLoopJoin") <= 2, plan
+    assert scalar_bnlj_violations(df) == []
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
 
@@ -1533,18 +1533,8 @@ def test_approved_bnlj_carriers_are_row_bounded(spark, sf_dir):
     tools/plan_dump.py, which records any violation per query in
     PLANS_ALL.json (`bnlj_unbounded` on its stdout line)."""
     from simple_etl_pipeline_spark.operators.planaudit import (
-        formatted_plan,
         scalar_bnlj_violations,
     )
-
-    # The audit is specified for FRESH builds (planaudit docstring):
-    # an EXECUTED persisted frame left by an earlier test file splices
-    # an InMemoryRelation whose re-printed AdaptiveSparkPlan sections
-    # break the tree-art column arithmetic (r16 find — oracle-parity's
-    # collect of sim_ivfpq_topk's `assigned` persist did exactly
-    # this). Clear the session cache so the eight representatives are
-    # audited at full strictness, suite order notwithstanding.
-    spark.catalog.clearCache()
 
     for name in (
         "agg_basket_lift",
@@ -1557,5 +1547,5 @@ def test_approved_bnlj_carriers_are_row_bounded(spark, sf_dir):
         "train_hard_negatives",
     ):
         df = QUERIES[name](spark, sf_dir)
-        v = scalar_bnlj_violations(formatted_plan(df))
+        v = scalar_bnlj_violations(df)
         assert not v, (name, v)

@@ -4,9 +4,14 @@ plans that suite blesses."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from simple_etl_pipeline_spark.operators.planaudit import audit_plan
+from simple_etl_pipeline_spark.operators.planaudit import (
+    audit_plan,
+    formatted_plan,
+    scalar_bnlj_violations,
+)
 from simple_etl_pipeline_spark.schemas import load_table
 
 
@@ -135,246 +140,100 @@ def test_scalar_bnlj_bound_accepts_literal_pk_filter(spark, sf_dir):
     assert ok.ok, ok.findings
 
 
-def _fixture_plan(agg_keys_line: str) -> str:
-    """Synthetic formatted-plan text exercising every parser hazard the
-    round-15 audit hit live: AQE query-stage nodes with trailing
-    ', Statistics(...)' after the id, codegen '* ' markers shifting the
-    name column, and a two-level detail section."""
-    return (
-        "== Physical Plan ==\n"
-        "AdaptiveSparkPlan (10)\n"
-        "+- BroadcastNestedLoopJoin Cross BuildRight (9)\n"
-        "   :- Project (2)\n"
-        "   :  +- Scan parquet  (1)\n"
-        "   +- BroadcastQueryStage (8), Statistics(sizeInBytes=16.0 B,"
-        " rowCount=1)\n"
-        "      +- BroadcastExchange (7)\n"
-        "         +- * HashAggregate (6)\n"
-        "            +- Exchange (5)\n"
-        "               +- * HashAggregate (4)\n"
-        "                  +- Scan parquet  (3)\n"
-        "\n"
-        "(4) HashAggregate\n"
-        "Keys: []\n"
-        "Functions [1]: [partial_count(1)]\n"
-        "\n"
-        f"(6) HashAggregate\n{agg_keys_line}\n"
-        "Functions [1]: [count(1)]\n"
-    )
+def _rebuilt_after_collect(spark, sf_dir, build):
+    """A query rebuilt after its first build ran: the persisted frames
+    the first run executed are now cached, and the rebuilt plan reads
+    them through InMemoryTableScan nodes over their executed plans."""
+    build(spark, sf_dir).toPandas()
+    df = build(spark, sf_dir)
+    assert "InMemoryTableScan" in formatted_plan(df)
+    return df
 
 
-def test_scalar_bnlj_text_parser_statistics_and_codegen():
-    """Text-level pins for the audit parser: a zero-key aggregate
-    behind a Statistics-suffixed BroadcastQueryStage passes; the same
-    tree with a data-keyed aggregate is reported. No Spark session —
-    this is the parsing contract itself."""
-    from simple_etl_pipeline_spark.operators.planaudit import (
-        scalar_bnlj_violations,
-    )
+@pytest.mark.parametrize("name", ["sim_ivfpq_topk", "dedup_semdedup"])
+def test_scalar_bnlj_audit_reads_rebuilt_cached_plans(spark, sf_dir, name):
+    """The centroid broadcasts of a rebuilt k-means query sit inside
+    executed cached plans; the audit walks into them and passes them."""
+    from simple_etl_pipeline_spark.plans import similarity
 
-    ok = _fixture_plan("Keys: []")
-    assert scalar_bnlj_violations(ok) == []
-
-    keyed = _fixture_plan("Keys [1]: [user_id#5L]")
-    v = scalar_bnlj_violations(keyed)
-    assert len(v) == 1 and "keyed aggregate" in v[0], v
-
-    # dimension-bounded key names are the documented exception
-    centroid = _fixture_plan("Keys [1]: [c_id#5]")
-    assert scalar_bnlj_violations(centroid) == []
+    df = _rebuilt_after_collect(spark, sf_dir, getattr(similarity, name))
+    audit = audit_plan(df)
+    assert audit.ok, audit.findings
 
 
-def _spliced_plan(agg_keys_line: str) -> str:
-    """Synthetic cache-spliced plan modeled on the r16 live find: an
-    EXECUTED persisted frame re-printed under InMemoryRelation, whose
-    AdaptiveSparkPlan '== Final/Initial Plan ==' sections restart the
-    tree-art columns — the BNLJ inside them (34) renders with
-    unparseable children. A clean BNLJ (9) sits fully BEFORE the first
-    marker, where strict auditing must still apply."""
-    return (
-        "== Physical Plan ==\n"
-        "AdaptiveSparkPlan (40)\n"
-        "+- BroadcastHashJoin Inner BuildRight (39)\n"
-        "   :- Project (10)\n"
-        "   :  +- * BroadcastNestedLoopJoin Cross BuildRight (9)\n"
-        "   :     :- Scan parquet  (1)\n"
-        "   :     +- BroadcastExchange (8)\n"
-        "   :        +- HashAggregate (7)\n"
-        "   :           +- Exchange (6)\n"
-        "   :              +- HashAggregate (5)\n"
-        "   :                 +- Scan parquet  (4)\n"
-        "   +- BroadcastExchange (38)\n"
-        "      +- Filter (37)\n"
-        "         +- InMemoryTableScan (11)\n"
-        "               +- InMemoryRelation (12)\n"
-        "                     +- AdaptiveSparkPlan (36)\n"
-        "                        +- == Final Plan ==\n"
-        "                           ResultQueryStage (35)\n"
-        "                           +- * BroadcastNestedLoopJoin Cross"
-        " BuildRight (34)\n"
-        "                              :- Scan parquet  (30)\n"
-        "      +- == Initial Plan ==\n"
-        "         HashAggregate (33)\n"
-        "         +- Scan parquet  (30)\n"
-        "\n"
-        f"(7) HashAggregate\n{agg_keys_line}\n"
-        "Functions [1]: [count(1)]\n"
-        "\n"
-        "(5) HashAggregate\nKeys: []\n"
-        "Functions [1]: [partial_count(1)]\n"
-    )
-
-
-def test_scalar_bnlj_audit_skips_executed_cache_splices():
-    """r16 live find (suite-ordering failure): an executed persist
-    spliced into a later fresh build re-prints its AdaptiveSparkPlan
-    sections at RESET columns, so nodes after the first
-    '== Final/Initial Plan ==' marker have meaningless tree-art
-    parent/child columns. The audit must (a) not emit phantom
-    'expected 2 children' findings for BNLJs inside the splice — they
-    were audited at the fresh build that created the cache and never
-    re-execute — while (b) keeping full strictness for everything
-    printed before the marker."""
-    from simple_etl_pipeline_spark.operators.planaudit import (
-        scalar_bnlj_violations,
-    )
-
-    # a cached plan AQE has not finalized prints '== Current Plan =='
-    # in place of '== Final Plan ==': the same splice, the same cut
-    for marker in ("== Final Plan ==", "== Current Plan =="):
-
-        def spliced(keys: str) -> str:
-            return _spliced_plan(keys).replace("== Final Plan ==", marker)
-
-        # spliced BNLJ (34) is out of scope; clean pre-marker BNLJ passes
-        assert scalar_bnlj_violations(spliced("Keys: []")) == [], marker
-
-        # pre-marker rigor retained: the keyed aggregate is still flagged,
-        # and ONLY it — no phantom finding for the spliced node
-        v = scalar_bnlj_violations(spliced("Keys [1]: [user_id#5L]"))
-        assert len(v) == 1 and "(9)" in v[0] and "keyed aggregate" in v[0], (
-            marker,
-            v,
+def test_scalar_bnlj_audit_flags_keyed_broadcast_of_executed_persist(
+    spark, sf_dir
+):
+    """A keyed aggregate that was persisted and executed, broadcast
+    into a BNLJ beside a scalar broadcast, is flagged — and flagged once
+    when two cache scans lead to the same cached BNLJ."""
+    nation = load_table(spark, sf_dir, "nation")
+    orders = load_table(spark, sf_dir, "orders")
+    keyed = orders.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("n"))
+    keyed = keyed.persist()
+    crossed = nation.crossJoin(F.broadcast(keyed)).persist()
+    try:
+        keyed.toPandas()
+        scalar = orders.agg(F.max("o_totalprice").alias("mx"))
+        audit = audit_plan(nation.crossJoin(F.broadcast(keyed)).crossJoin(
+            F.broadcast(scalar)
+        ))
+        assert any("keyed aggregate" in f for f in audit.findings), (
+            audit.findings
         )
 
+        crossed.toPandas()
+        v = scalar_bnlj_violations(crossed.union(crossed))
+        assert len(v) == 1 and "keyed aggregate" in v[0], v
+    finally:
+        crossed.unpersist()
+        keyed.unpersist()
 
-def test_scalar_bnlj_audit_reports_plan_with_nothing_in_scope():
-    """When every BNLJ of a plan sits inside an executed-cache splice,
-    nothing was audited: the result says so instead of an all-clear."""
-    from simple_etl_pipeline_spark.operators.planaudit import (
-        scalar_bnlj_violations,
+
+@pytest.mark.parametrize("keyed", [False, True])
+def test_scalar_bnlj_audit_follows_reused_exchange_to_its_source(
+    spark, sf_dir, keyed
+):
+    """An executed union of two identical cross joins broadcasts the
+    second build side through a ReusedExchange: the audit bounds it by
+    the exchange it reuses, passing a scalar and flagging a keyed
+    aggregate on both joins."""
+    nation = load_table(spark, sf_dir, "nation")
+    orders = load_table(spark, sf_dir, "orders")
+    grouped = orders.groupBy("o_custkey") if keyed else orders.groupBy()
+    crossed = nation.crossJoin(
+        F.broadcast(grouped.agg(F.count(F.lit(1)).alias("n")))
     )
+    df = crossed.union(crossed)
+    df.toPandas()
+    assert "ReusedExchange" in formatted_plan(df)
 
-    plan = (
-        "== Physical Plan ==\n"
-        "AdaptiveSparkPlan (40)\n"
-        "+- BroadcastHashJoin Inner BuildRight (39)\n"
-        "   :- Scan parquet  (1)\n"
-        "   +- BroadcastExchange (38)\n"
-        "      +- Filter (37)\n"
-        "         +- InMemoryTableScan (11)\n"
-        "               +- InMemoryRelation (12)\n"
-        "                     +- AdaptiveSparkPlan (36)\n"
-        "                        +- == Final Plan ==\n"
-        "                           ResultQueryStage (35)\n"
-        "                           +- * BroadcastNestedLoopJoin Cross"
-        " BuildRight (34)\n"
-        "                              :- Scan parquet  (30)\n"
-        "      +- == Initial Plan ==\n"
-        "         HashAggregate (33)\n"
-        "         +- Scan parquet  (30)\n"
-    )
-    v = scalar_bnlj_violations(plan)
-    assert len(v) == 1 and "out of audit scope" in v[0], v
+    audit = audit_plan(df)
+    if keyed:
+        v = [f for f in audit.findings if "keyed aggregate" in f]
+        assert len(v) == 2, audit.findings
+    else:
+        assert audit.ok, audit.findings
 
 
-def _splice_inside_bnlj_plan(agg_keys_line: str) -> str:
-    """A pre-marker BNLJ (37) whose FIRST child holds the
-    executed-cache splice: the splice restarts the tree art at a column
-    left of the BNLJ, so the BNLJ's parsed subtree stops exactly at the
-    cut and its second child (33), printed after the splice, no longer
-    reads as its child. The clean BNLJ (9) ends well before the cut."""
-    return (
-        "== Physical Plan ==\n"
-        "AdaptiveSparkPlan (40)\n"
-        "+- BroadcastHashJoin Inner BuildRight (39)\n"
-        "   :- Project (10)\n"
-        "   :  +- * BroadcastNestedLoopJoin Cross BuildRight (9)\n"
-        "   :     :- Scan parquet  (1)\n"
-        "   :     +- BroadcastExchange (8)\n"
-        "   :        +- HashAggregate (7)\n"
-        "   :           +- Exchange (6)\n"
-        "   :              +- HashAggregate (5)\n"
-        "   :                 +- Scan parquet  (4)\n"
-        "   +- BroadcastExchange (38)\n"
-        "      +- BroadcastNestedLoopJoin Cross BuildRight (37)\n"
-        "         :- InMemoryTableScan (11)\n"
-        "         :     +- InMemoryRelation (12)\n"
-        "         :           +- AdaptiveSparkPlan (36)\n"
-        "         :              +- == Final Plan ==\n"
-        "  ResultQueryStage (35)\n"
-        "  +- Scan parquet  (30)\n"
-        "         +- BroadcastExchange (33)\n"
-        "            +- Scan parquet  (32)\n"
-        "\n"
-        f"(7) HashAggregate\n{agg_keys_line}\n"
-        "Functions [1]: [count(1)]\n"
-        "\n"
-        "(5) HashAggregate\nKeys: []\n"
-        "Functions [1]: [partial_count(1)]\n"
-    )
+def test_scalar_bnlj_k_bounded_key_exemption(spark, sf_dir, tmp_path):
+    """A broadcast keyed on a column aliased to a documented
+    dimension-sized key name passes; the same broadcast keyed on the
+    data-dependent name is flagged."""
+    nation = load_table(spark, sf_dir, "nation")
+    # stored under the alias: a plan-time alias of a grouping column is
+    # folded back into the column it renames
+    path = str(tmp_path / "ids")
+    load_table(spark, sf_dir, "events").select(
+        "user_id", F.col("user_id").alias("c_id")
+    ).write.parquet(path)
 
+    def audit(key: str):
+        build = spark.read.parquet(path).groupBy(key).agg(
+            F.count(F.lit(1)).alias("n")
+        )
+        return audit_plan(nation.crossJoin(F.broadcast(build)))
 
-def test_scalar_bnlj_audit_treats_subtree_ending_at_cut_as_crossing():
-    """A BNLJ whose subtree the splice truncates exactly at the cut must
-    not yield a phantom 'expected 2 children' finding; the BNLJ before
-    it keeps full strictness."""
-    from simple_etl_pipeline_spark.operators.planaudit import (
-        scalar_bnlj_violations,
-    )
-
-    assert scalar_bnlj_violations(_splice_inside_bnlj_plan("Keys: []")) == []
-    v = scalar_bnlj_violations(
-        _splice_inside_bnlj_plan("Keys [1]: [user_id#5L]")
-    )
-    assert len(v) == 1 and "(9)" in v[0] and "keyed aggregate" in v[0], v
-
-
-def test_scalar_bnlj_reused_exchange_ignores_spliced_sources():
-    """A ReusedExchange before the cut is bounded only by a source
-    exchange before the cut: a spliced exchange with the same columns
-    whose (meaningless) subtree reads as a scalar aggregate must not
-    vouch for it."""
-    from simple_etl_pipeline_spark.operators.planaudit import (
-        scalar_bnlj_violations,
-    )
-
-    plan = (
-        "== Physical Plan ==\n"
-        "AdaptiveSparkPlan (40)\n"
-        "+- BroadcastHashJoin Inner BuildRight (39)\n"
-        "   :- Project (10)\n"
-        "   :  +- * BroadcastNestedLoopJoin Cross BuildRight (9)\n"
-        "   :     :- Scan parquet  (1)\n"
-        "   :     +- ReusedExchange (8)\n"
-        "   +- BroadcastExchange (38)\n"
-        "      +- Filter (37)\n"
-        "         +- InMemoryTableScan (11)\n"
-        "               +- InMemoryRelation (12)\n"
-        "                     +- AdaptiveSparkPlan (36)\n"
-        "                        +- == Final Plan ==\n"
-        "                           BroadcastExchange (33)\n"
-        "                           +- HashAggregate (32)\n"
-        "                              +- Scan parquet  (30)\n"
-        "\n"
-        "(8) ReusedExchange [Reuses operator id: 33]\n"
-        "Output [1]: [n#1L]\n"
-        "\n"
-        "(32) HashAggregate\nKeys: []\n"
-        "Functions [1]: [count(1)]\n"
-        "\n"
-        "(33) BroadcastExchange\n"
-        "Input [1]: [n#2L]\n"
-    )
-    v = scalar_bnlj_violations(plan)
-    assert len(v) == 1 and "(9)" in v[0] and "ReusedExchange" in v[0], v
+    assert audit("c_id").ok, audit("c_id").findings
+    flagged = audit("user_id").findings
+    assert len(flagged) == 1 and "keyed aggregate" in flagged[0], flagged

@@ -163,6 +163,35 @@ def test_sheets_with_fake_client(small_df):
     assert sheet.shared == [(None, "anyone", "reader")]
 
 
+def test_sheets_sink_is_one_job(spark):
+    """The empty check, the row cap and the upload all read one
+    bounded collect: one Spark job."""
+    df = spark.range(50).select(F.col("id").cast("string").alias("title"))
+    sheet = FakeSheet()
+    sc = spark.sparkContext
+    group = "test_sheets_sink_jobs"
+    sc.setJobGroup(group, "sheets sink job count")
+    try:
+        save_to_google_sheets(
+            df, "unused.json", spreadsheet_id="abc",
+            client_factory=lambda: FakeClient(sheet),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert len(sheet.ws.updates[0]) == 51  # header + every row
+
+
+def test_sheets_row_cap(spark, monkeypatch):
+    from simple_etl_pipeline_spark.sinks import sheets
+
+    monkeypatch.setattr(sheets, "MAX_SHEET_ROWS", 3)
+    factory = lambda: FakeClient(FakeSheet())  # noqa: E731
+    save_to_google_sheets(spark.range(3), "unused.json", client_factory=factory)
+    with pytest.raises(LoadError, match="capped at 3"):
+        save_to_google_sheets(spark.range(4), "unused.json", client_factory=factory)
+
+
 def test_sheets_empty_raises(spark):
     empty = spark.createDataFrame([], "title string")
     with pytest.raises(LoadError, match="empty"):

@@ -19,7 +19,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from simple_etl_pipeline_spark.operators.planaudit import (
-    formatted_plan,
     plan_fingerprint,
     scalar_bnlj_violations,
 )
@@ -72,7 +71,7 @@ def main() -> None:
             # recorded per query so the inventory can't silently absorb
             # a non-scalar BNLJ behind the approved-carrier count
             if out[name]["nodes"].get("BroadcastNestedLoopJoin"):
-                v = scalar_bnlj_violations(formatted_plan(df))
+                v = scalar_bnlj_violations(df)
                 if v:
                     out[name]["bnlj_violations"] = v
         except Exception as ex:  # streaming entries have no batch plan
