@@ -260,14 +260,6 @@ FP_RESIDUAL = {
     "agg_distinct_counts",
     "txt_dataset_card",
     "dq_profile_drift",
-    # r16 find: flips between two consecutive plan_dump runs on
-    # IDENTICAL code (node counts identical) — its 380+-node formatted
-    # text embeds an expression-id-bearing name family the normalizer
-    # doesn't cover. Not construction memos: with none left it still
-    # takes a new value on each plan_dump run (built after ~130 other
-    # queries), yet is identical across fresh sessions that build it
-    # first.
-    "txt_triangle_count",
 }
 
 
@@ -341,6 +333,7 @@ def main() -> None:
         if name not in queries:
             continue
         fn = queries[name]
+        spark.catalog.clearCache()  # fingerprint a fresh build
         plan_fps[name] = _plan_fingerprint(fn(spark, SF_DIR))
         # One UNTIMED warmup execution first: the first run pays JIT
         # compilation, codegen compile, shuffle-service spin-up and any
@@ -371,21 +364,6 @@ def main() -> None:
             df = fn(spark, SF_DIR)
             n = df.count()
             runs.append(time.perf_counter() - t0)
-        # Free the global_row_number range-shuffle barriers THIS
-        # query's runs persisted (ADVICE r8: otherwise each
-        # rank-bearing query leaks 4 cached frames per bench pass —
-        # warmup + 3 timed builds — and accumulated entries distort
-        # later queries' memory). Released AFTER the timed runs so
-        # within-query cache substitution behavior (and hence timings)
-        # match prior rounds. Per-frame release (ADVICE r9): the four
-        # builds are sameResult-identical, so releasing for the last
-        # frame drains all four without touching barriers of any other
-        # pending frame.
-        from simple_etl_pipeline_spark.plans.relational import (
-            release_barriers_for,
-        )
-
-        release_barriers_for(df)
         med = statistics.median(runs)
         timings[name] = round(med, 3)
         spreads[name] = round(max(runs) - min(runs), 3)
@@ -399,13 +377,9 @@ def main() -> None:
 
     # Cold-path meter (VERDICT r15 #9): after the steady-state loop so
     # it cannot perturb the medians above. clearCache() before each
-    # row drops every persisted frame (pair lists, rank barriers, the
-    # bm25 dl/tf barriers); the fresh fn() build re-persists its own,
+    # row drops every persisted frame (pair lists, the bm25 dl/tf
+    # barriers); the fresh fn() build re-persists its own,
     # so the timed run pays the full cold pipeline exactly once.
-    from simple_etl_pipeline_spark.plans.relational import (
-        release_barriers_for as _release,
-    )
-
     cold: dict[str, float] = {}
     for name in COLD_METER:
         if name not in queries:
@@ -415,7 +389,6 @@ def main() -> None:
         df = queries[name](spark, SF_DIR)
         df.count()
         cold[name] = round(time.perf_counter() - t0, 3)
-        _release(df)
         print(f"# cold {name}: {cold[name]:.3f}s", file=sys.stderr)
     spark.catalog.clearCache()
 

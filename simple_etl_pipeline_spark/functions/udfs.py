@@ -11,12 +11,9 @@ keeping the hot path JVM-side.
 
 from __future__ import annotations
 
-from functools import cache
-
 import pandas as pd  # module-level: get_type_hints resolves "pd.Series"
 
 
-@cache
 def quality_score_udf():
     """Vectorized (Arrow-batched) twin of the Column-expression quality
     score: 0.5*min(tokens/100,1) + 0.3*(1-stop_ratio) + 0.2*min(atl/8,1).
@@ -38,7 +35,6 @@ def quality_score_udf():
     return _score
 
 
-@cache
 def trimmed_mean_udaf():
     """Arrow-batched grouped aggregation (the UDAF shape): mean after
     dropping one min and one max per group. Each group's values arrive
@@ -60,7 +56,6 @@ def trimmed_mean_udaf():
     return _trimmed_mean
 
 
-@cache
 def ngrams_udtf():
     """Python UDTF (Spark 4 table function): one input row -> N output
     rows of (pos, ngram). The lateral-join form of row expansion — for

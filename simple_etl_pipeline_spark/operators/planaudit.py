@@ -75,12 +75,13 @@ def plan_fingerprint(df: DataFrame) -> str:
     id-keyed structure — and a streaming backfill's staged scan
     embeds its per-run temp dir (st_scd2_users). Treat either
     fingerprint value as stable for those; node counts are
-    unaffected. Separately, REBUILDING a persist()/checkpoint-bearing
-    query while a previous build's cache is alive legitimately
-    substitutes InMemoryTableScan subtrees (graph/dedup family) —
-    that is a real plan change by Spark's cache manager, so
-    fingerprints are specified for FRESH builds (bench and plan_dump
-    both fingerprint the first build, in fixed order)."""
+    unaffected. Separately, building a query while a frame persisted by
+    an EARLIER build is still cached legitimately substitutes
+    InMemoryTableScan subtrees (graph/dedup family: the shingle sets
+    and pair lists) — that is a real plan change by Spark's cache
+    manager, so fingerprints are specified for FRESH builds: bench and
+    plan_dump call ``spark.catalog.clearCache()`` before each build
+    they fingerprint."""
     import hashlib
     import re
 
@@ -132,11 +133,10 @@ _AGGREGATES = frozenset(
 
 # Leaves that are constant-size by construction (driver-side literal
 # rows), so a broadcast built purely over them is bounded without an
-# aggregate. RDDScanExec ("Scan ExistingRDD") is a createDataFrame
-# literal in this engine: the data path is exclusively parquet +
-# derived frames (the no-.rdd/no-.collect rule, pinned by the repo grep
-# audits), so the only RDD-backed scans are driver-literal parameter
-# frames (e.g. the percentile list ev_quantile_sketch probes with).
+# aggregate. An RDDScanExec ("Scan ExistingRDD") counts only when it is
+# a createDataFrame literal (e.g. the percentile list
+# ev_quantile_sketch probes with): see :func:`_is_driver_literal`.
+# A checkpointed frame is an RDD scan too, of data-sized rows.
 _CONSTANT_LEAVES = frozenset({"LocalTableScanExec", "RDDScanExec"})
 
 # Primary-key columns of the testdata tables (schemas.py), unique by
@@ -222,6 +222,23 @@ def _bounds_unique_id(cond) -> bool:
     return False
 
 
+def _is_driver_literal(node) -> bool:
+    """True iff every leaf of an RDDScanExec's RDD lineage is a
+    ParallelCollectionRDD: rows the driver handed over
+    (createDataFrame), not a checkpoint or a scan of data."""
+    stack, seen = [node.rdd()], set()
+    while stack:
+        rdd = stack.pop()
+        if rdd.id() in seen:
+            continue
+        seen.add(rdd.id())
+        deps = _seq(rdd.dependencies())
+        if not deps and _name(rdd) != "ParallelCollectionRDD":
+            return False
+        stack.extend(d.rdd() for d in deps)
+    return True
+
+
 def _bound_violation(node) -> str | None:
     """None if the plan under ``node`` outputs provably row-bounded
     rows, else the reason."""
@@ -236,6 +253,8 @@ def _bound_violation(node) -> str | None:
                 "data-dependent rows"
             )
         if name in _CONSTANT_LEAVES:
+            if name == "RDDScanExec" and not _is_driver_literal(node):
+                return "RDD scan over data rows (not a driver literal)"
             return None
         if name == "FilterExec" and _bounds_unique_id(node.condition()):
             # the subtree below is then irrelevant to the bound

@@ -2506,10 +2506,10 @@ def ev_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     trimmed_mean_micros — all exact integer floor-div means.
 
     Scale shape: one user-keyed aggregation (|users| rows), the
-    primitive's range shuffle + pid-keyed window + metadata offsets,
+    primitive's range shuffle + local sort + distributed sequence,
     then two 2-row aggregations joined on variant (bounded universe).
     At 100 TB nothing after the user rollup exceeds |users| rows, and
-    no window is wider than one range partition."""
+    no window runs over data rows."""
     from simple_etl_pipeline_spark.plans.relational import global_row_number
 
     ev = load_table(spark, sf_dir, "events").filter(
@@ -3024,8 +3024,7 @@ def ev_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank-equals-ceil(n/2) filter selects each type's median row
     without sorting anything on one node. Pass two ranks the absolute
     deviations the same way; pass three scores the deviations frame
-    (read back off the second pass's persist barrier) against the
-    broadcast MAD.
+    (the second pass's ranked frame) against the broadcast MAD.
 
     Overflow staging: values are exact integer micros (the
     ev_quantile_sketch cast; |value| <= ~9.2e12 by the same ANSI
@@ -3063,11 +3062,7 @@ def ev_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("g1") - F.col("s1") == F.expr("(n + 1) div 2"))
         .select("et", F.col("z").alias("med_micros"), "n")
     )
-    # dev reads (et, z, tie) back off r1's persisted rank barrier
-    # instead of re-scanning events (r15): r1 carries exactly z's
-    # columns plus g1, so the second corpus scan + filter + cast
-    # pipeline is replaced by a cache read — same rows by construction.
-    dev = r1.select("et", "z", "tie").join(F.broadcast(med), "et").select(
+    dev = z.join(F.broadcast(med), "et").select(
         "et",
         "tie",
         "n",

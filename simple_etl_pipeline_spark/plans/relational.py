@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.internal import InternalFunction
 
 from simple_etl_pipeline_spark.functions.agg import (
     davg,
@@ -1465,7 +1466,7 @@ QUERIES = {
     #     — the salting plan shape — is pinned by test_plan_shapes.
     #   - window_running_total: prefix-sum semantics are now pinned by
     #     the global_prefix_sum surfaces (train_token_budget_pack's
-    #     barrier-shape test + the registering ev_trimmed_mean rank
+    #     plan-shape test + the registering ev_trimmed_mean rank
     #     path); the un-partitioned running-sum window it demonstrates
     #     is the exact shape global_prefix_sum exists to replace.
     "q2_top_supplier_per_nation": q2_top_supplier_per_nation,
@@ -1854,178 +1855,10 @@ FROM supplier ORDER BY s_suppkey
 """
 
 
-# Every global_row_number barrier persisted this session, so harnesses
-# can unpersist after materialization (ADVICE r8: bench loops otherwise
-# accumulate one cached range-shuffle per invocation for the session's
-# lifetime, and the stale entries are themselves a source of
-# InMemoryTableScan fingerprint drift). The builders stay lazy — they
-# cannot unpersist themselves without triggering a job — so release is
-# the consumer's move, AFTER the result is materialized, and it must
-# be PER-FRAME (ADVICE r9): bench.py and testing.compare_with_oracle
-# call release_barriers_for(result) so a barrier belonging to some
-# OTHER frame that was built but not yet materialized keeps its
-# persistence marker. A driver that runs each query once leaks at most
-# one bounded barrier per rank-bearing query per run.
-_ROW_NUMBER_BARRIERS: list[DataFrame] = []
-
-
-def _plan_contains(parent_jplan, child_jplan) -> bool:
-    """True when `child_jplan` is (semantically) a subtree of
-    `parent_jplan` — sameResult-based walk over the analyzed logical
-    plan, so expression-id re-assignment between two analyses of the
-    same build does not defeat the match. Subquery expressions are not
-    descended: barriers are join/window inputs, never correlated
-    subqueries, by construction."""
-    stack = [parent_jplan]
-    while stack:
-        node = stack.pop()
-        if node.sameResult(child_jplan):
-            return True
-        ch = node.children()
-        for i in range(ch.size()):
-            stack.append(ch.apply(i))
-    return False
-
-
-# Consecutive-undiagnosable-check budget before a barrier is evicted
-# from the registry anyway (ADVICE r11): a barrier whose py4j gateway
-# is entirely down raises on EVERY probe, so it can never be positively
-# confirmed dead — without a budget it would sit in
-# _ROW_NUMBER_BARRIERS for the life of the process after an abnormal
-# JVM death. Three strikes keeps the r10 safety property for transient
-# hiccups (one or two failed probes on a live barrier keep it
-# registered, counter reset by the next successful check) while
-# bounding the residue: a gateway that is down for three consecutive
-# release passes is not coming back for that barrier's JVM state.
-_BARRIER_UNDIAG_EVICT_AFTER = 3
-
-
-def _barrier_session_dead(b: DataFrame) -> bool | None:
-    """Tri-state liveness probe for a registered barrier:
-    True  — the SparkSession/context is POSITIVELY confirmed stopped
-            (its cache entry died with the JVM state, so evicting the
-            registry entry frees nothing and risks nothing);
-    False — positively confirmed alive;
-    None  — the probe itself failed (py4j gateway down / JVM error):
-            undiagnosable. The caller keeps the barrier registered,
-            counting consecutive None verdicts against
-            _BARRIER_UNDIAG_EVICT_AFTER (ADVICE r10 kept unknowns
-            forever; ADVICE r11 bounds that residue)."""
-    try:
-        sc = b.sparkSession.sparkContext
-        if sc is None or getattr(sc, "_jsc", None) is None:
-            return True
-        return bool(sc._jsc.sc().isStopped())
-    except Exception:
-        return None
-
-
-def release_barriers_for(df: DataFrame) -> int:
-    """Unpersist exactly the global_row_number / global_prefix_sum
-    barriers that are plan subtrees of `df`; returns how many were
-    released. Call AFTER materializing `df`.
-
-    This is the per-frame form ADVICE r9 asked for: the old global
-    release popped barriers belonging to OTHER frames that were built
-    but not yet materialized. unpersist() removes the persistence
-    marker for good — nothing repopulates it — so such a frame's
-    window and counts branches would later re-execute the range
-    exchange independently, reintroducing the boundary-sampling
-    nondeterminism the barrier exists to prevent (latent on clusters,
-    invisible on a deterministic local box).
-
-    Spark's CacheManager keys cache entries by sameResult, so
-    semantically identical barriers (e.g. the same query built once
-    per timed bench run) denote ONE cache entry; releasing them
-    together here matches that reality. The known residual: two
-    coexisting IDENTICAL pending frames share a cache entry, so
-    releasing one's barrier releases the twin's — inherent to the
-    CacheManager, not to this registry (partition-invariance twins
-    differ in partitioning and are unaffected)."""
-    if not _ROW_NUMBER_BARRIERS:
-        return 0
-    try:
-        parent = df._jdf.queryExecution().analyzed()
-    except Exception:
-        return 0
-    kept: list[DataFrame] = []
-    dropped: list[DataFrame] = []
-    for b in _ROW_NUMBER_BARRIERS:
-        try:
-            mine = _plan_contains(
-                parent, b._jdf.queryExecution().analyzed()
-            )
-            b._graft_undiag_checks = 0
-        except Exception:
-            # The containment check itself failed (py4j hiccup, JVM
-            # error). Evict the barrier when its session is CONFIRMED
-            # dead — a transient failure on a live other-frame barrier
-            # must NOT unpersist it, or that frame's branches would
-            # re-execute the range exchange independently (ADVICE
-            # r10). An UNDIAGNOSABLE barrier (the liveness probe
-            # itself raises — gateway down) stays registered for up to
-            # _BARRIER_UNDIAG_EVICT_AFTER consecutive failed passes,
-            # then is evicted anyway (ADVICE r11: a dead gateway can
-            # never be positively confirmed, and the registry must not
-            # accumulate such residue for the process lifetime). The
-            # counter lives on the barrier frame and resets on any
-            # successful containment or liveness check.
-            dead = _barrier_session_dead(b)
-            if dead is None:
-                strikes = getattr(b, "_graft_undiag_checks", 0) + 1
-                b._graft_undiag_checks = strikes
-                mine = strikes >= _BARRIER_UNDIAG_EVICT_AFTER
-            else:
-                b._graft_undiag_checks = 0
-                mine = dead
-        (dropped if mine else kept).append(b)
-    _ROW_NUMBER_BARRIERS[:] = kept
-    n = 0
-    for b in dropped:
-        try:
-            b.unpersist()
-            n += 1
-        except Exception:
-            pass  # session already stopped — nothing to free
-    return n
-
-
-def release_row_number_barriers() -> int:
-    """Unpersist EVERY outstanding barrier; returns how many. This is
-    session-level teardown for harnesses that have materialized every
-    frame they built (end of a bench/probe pass, pytest session end).
-    NOT safe while some rank-bearing frame is still pending (re-)
-    materialization: unpersist removes the persistence marker for good
-    — nothing repopulates it — and that frame would re-execute the
-    range exchange per branch (see release_barriers_for, the per-frame
-    release consumers use after each materialization)."""
-    n = 0
-    while _ROW_NUMBER_BARRIERS:
-        df = _ROW_NUMBER_BARRIERS.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass  # session already stopped — nothing to free
-    return n
-
-
-def _ordinal_width_guard(gpid, cnt):
-    """0 when `cnt` fits the 33-bit local ordinal, raises otherwise —
-    global_row_number's wrap guard, factored out so the expression is
-    directly testable without materializing 2^33 rows. Evaluated on
-    the |partitions|-row metadata frame only, never data-sized."""
-    return F.when(cnt < F.lit(1 << 33), F.lit(0)).otherwise(
-        F.raise_error(
-            F.format_string(
-                "global_row_number: range partition %s holds %s rows"
-                " (>= 2^33) — the 33-bit local ordinal would wrap;"
-                " raise num_partitions",
-                gpid,
-                cnt,
-            )
-        )
-    )
+# Rows per prefix-sum block: global_prefix_sum's running-sum window
+# runs per block of this many consecutive ranks, and the block offsets
+# window sees at most N / PREFIX_BLOCK_ROWS rows.
+PREFIX_BLOCK_ROWS = 1 << 20
 
 
 def global_row_number(
@@ -2035,107 +1868,44 @@ def global_row_number(
     num_partitions: int | None = None,
     total_out: str | None = None,
 ):
-    """Exact 1-based global row number under a TOTAL order — without a
-    single-partition window (the scale-killer VERDICT r7 #3 flagged in
-    the first RFM cut). The classic two-pass offset pattern:
+    """Exact 1-based global row number under a TOTAL order, without a
+    single-partition window:
 
       1. range-shuffle on the sort key (`repartitionByRange`), so
          partition i holds a contiguous key range and partition order
          equals key order;
-      2. ONE explicit in-partition sort (`sortWithinPartitions`), then
-         the local rank is read off `monotonically_increasing_id()` —
-         its low 33 bits are the row's ORDINAL WITHIN ITS PARTITION,
-         assigned in row order, so after the local sort they ARE the
-         local row_number minus 1 (the classic zipWithIndex device).
-         The r15 shape before this: a window PARTITIONED BY
-         `spark_partition_id()` — but the range-partitioned barrier
-         cannot satisfy that window's ClusteredDistribution(_gpid), so
-         EVERY consumer of the ranked frame re-paid a corpus-sized
-         hashpartitioning(_gpid) Exchange + Sort + Window above the
-         cache (ev_mad_outliers ran five such passes, as its
-         formatted plan showed). Now there is no Window node and
-         no second exchange at all;
-      3. per-partition counts -> cumulative offsets. The counts frame
-         is |partitions| rows of METADATA; its running-sum window is
-         the adjudicated bounded-universe single-partition class (like
-         the 1-row scalar broadcasts), never data-sized;
-      4. broadcast-join the offsets back: rn = local_rn + offset.
+      2. sort within each partition;
+      3. number the rows with Spark's distributed sequence
+         (`AttachDistributedSequenceExec`, the pandas-on-Spark default
+         index): it zips ONE execution of its child with 64-bit
+         indices in partition order, then row order. Spark caches that
+         child for the length of the action and frees it when the
+         action ends, so the per-partition counts and the numbered rows
+         come from the same range boundaries.
 
-    Determinism: the output must depend only on the total order, not
-    on where the sampled range boundaries land. Range-boundary
-    sampling reads its input via shuffle fetch, whose row order is not
-    deterministic across re-executions on a cluster, so two
-    independent executions of the exchange could place
-    boundary-adjacent rows differently and break the offsets/pid
-    agreement. The barrier is therefore explicit AND sits ABOVE the
-    rank assignment: the sorted, pid- and rank-stamped frame is
-    persisted (MEMORY_AND_DISK) and materialized once; the counts agg
-    and every downstream consumer read that one materialization (the
-    pre-r15 barrier sat BELOW the per-consumer windows, which both
-    re-sorted per consumer and left the window/counts branches as the
-    two readers the old comment worried about — now the exchange has
-    exactly one consumer by construction). persist() is chosen over
-    localCheckpoint so the range-shuffle subtree stays visible to plan
-    audits, and a lost-cache-partition recompute re-reads the same
-    pids (the shuffle map output fixes the boundaries) and re-sorts to
-    the same order (sort_cols is a total order), reproducing identical
-    ranks. `monotonically_increasing_id` / `spark_partition_id` are
-    nondeterministic-MARKED (order-dependent), which additionally
-    pins them against optimizer reordering; their VALUES here are
-    fully determined by the total order. `sort_cols` must be a total
-    order (include a unique tiebreaker) and null placement must be
-    encoded explicitly (e.g. a null-flag column) — range partitioning
+    No window runs at all; the only data-sized work is the range
+    shuffle and the local sort. The ranks are a pure function of the
+    total order, not of where the sampled range boundaries fall, so a
+    recompute (a lost partition, a cleared cache, a second branch that
+    reads the ranked frame) reproduces them exactly and the frame needs
+    no persist and no release.
+
+    `total_out`, when given, also returns a 1-row frame with the row
+    count under that name (`df.agg(count)`). `sort_cols` must be a
+    total order (include a unique tiebreaker) and null placement must
+    be encoded explicitly (e.g. a null-flag column): range partitioning
     and the local sort both use plain ascending order."""
-    spark = df.sparkSession
     n = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    local = (
-        df.repartitionByRange(n, *sort_cols)
-        .sortWithinPartitions(*sort_cols)
-        .withColumn("_gpid", F.spark_partition_id())
-        .withColumn(
-            "_lrn",
-            F.monotonically_increasing_id().bitwiseAND(
-                F.lit((1 << 33) - 1)
-            )
-            + 1,
-        )
-        .persist()
-    )
-    _ROW_NUMBER_BARRIERS.append(local)
-    counts = local.groupBy("_gpid").agg(F.count(F.lit(1)).alias("_cnt"))
-    wo = Window.orderBy("_gpid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    # 33-bit ordinal guard (VERDICT r15 #4): _lrn is MID's low 33 bits,
-    # which wrap SILENTLY at 2^33 rows per range partition — reachable
-    # at 100 TB if a skewed key range concentrates ~8.6B rows in one
-    # partition. The exact per-partition count is already on this
-    # metadata frame, so the check rides the existing offsets
-    # projection (added per OUTPUT row, so every partition's own count
-    # is checked — including the last, whose _cnt never enters any
-    # preceding-frame sum): zero extra jobs, fails loudly instead.
-    offsets = counts.select(
-        "_gpid",
-        (
-            F.coalesce(F.sum("_cnt").over(wo), F.lit(0))
-            + _ordinal_width_guard(F.col("_gpid"), F.col("_cnt"))
-        ).alias("_off"),
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
     ranked = (
-        local.join(F.broadcast(offsets), "_gpid")
-        .withColumn(out, (F.col("_lrn") + F.col("_off")).cast("bigint"))
-        .drop("_gpid", "_lrn")
+        df.repartitionByRange(n, *sort_cols)
+        .sortWithinPartitions(*sort_cols)
+        .withColumn(out, InternalFunction.distributed_sequence_id() + 1)
     )
     if total_out is None:
         return ranked
-    # 1-row total derived from the per-partition counts (reads the
-    # same cached barrier — no second pass over the ranked frame)
-    totals = counts.agg(
-        F.coalesce(F.sum("_cnt"), F.lit(0)).cast("bigint").alias(total_out)
-    )
-    return ranked, totals
+    return ranked, df.agg(F.count(F.lit(1)).alias(total_out))
 
 
 def global_prefix_sum(
@@ -2147,71 +1917,49 @@ def global_prefix_sum(
     num_partitions: int | None = None,
 ):
     """Exact global 1-based rank AND inclusive running sum of
-    `val_col` under a TOTAL order — the prefix-sum sibling of
-    `global_row_number`, same two-pass offset pattern, same persist()
-    barrier contract (registered in _ROW_NUMBER_BARRIERS for release):
+    `val_col` under a TOTAL order: the scale-safe form of
+    `SUM(v) OVER (ORDER BY ...)`, an un-partitioned running sum that
+    would otherwise pull the whole frame through one task.
 
-      1. range-shuffle on the sort key;
-      2. per-range-partition keyed window computes BOTH the local
-         row_number and the local running sum in ONE WindowExec
-         (shared partition/order spec);
-      3. the per-partition (count, value-sum) frame — |partitions|
-         rows of metadata — yields exclusive offsets for both via the
-         bounded-universe running-sum window;
-      4. broadcast-join back: rank = local + offset,
-         cum = local_cum + sum_offset.
+      1. rank with `global_row_number`;
+      2. cut the ranks into blocks of PREFIX_BLOCK_ROWS consecutive
+         rows (`_blk`) and run the running sum as a `_blk`-keyed
+         window: each window partition holds at most 2^20 rows;
+      3. per-block sums (a `_blk`-keyed aggregation, combined map-side)
+         give exclusive block offsets through a running-sum window over
+         the block sums: at most N / 2^20 rows;
+      4. broadcast-join the offsets back: cum = local cum + offset.
 
-    This is the scale-safe form of `SUM(v) OVER (ORDER BY ...)` —
-    an un-partitioned running sum that would otherwise serialize the
-    whole frame through one reducer. Preconditions as for
-    global_row_number (total order, explicit null placement) plus:
-    `val_col` must be a non-null integral column (coalesce at the
-    call site) so partial sums are exact under any partitioning."""
-    spark = df.sparkSession
-    n = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    ranged = df.repartitionByRange(n, *sort_cols).withColumn(
-        "_gpid", F.spark_partition_id()
-    )
-    w = Window.partitionBy("_gpid").orderBy(*sort_cols)
-    # The barrier persists the POST-window frame (r15): the range-
-    # partitioned child cannot satisfy the window's
-    # ClusteredDistribution(_gpid), so the window pays one
-    # hashpartitioning(_gpid) exchange + sort — persisting BELOW it
-    # (the pre-r15 shape) re-paid that exchange+sort per consumer of
-    # the ranked frame. Above it, the local running sum materializes
-    # once and every consumer (counts agg included) reads the cache;
-    # the range exchange now has exactly ONE consumer, which is the
-    # whole determinism argument (see global_row_number).
-    local = (
-        ranged.withColumn("_lrn", F.row_number().over(w))
-        .withColumn(
-            "_lcum",
-            F.sum(F.col(val_col)).over(
-                w.rowsBetween(Window.unboundedPreceding, 0)
+    Every branch is a pure function of the total order, so no barrier
+    is needed. Preconditions as for global_row_number (total order,
+    explicit null placement) plus: `val_col` must be a non-null
+    integral column (coalesce at the call site) so partial sums are
+    exact under any partitioning."""
+    ranked = global_row_number(
+        df, sort_cols, out=out_rank, num_partitions=num_partitions
+    ).withColumn("_blk", F.expr(f"({out_rank} - 1) div {PREFIX_BLOCK_ROWS}"))
+    block_sums = ranked.groupBy("_blk").agg(F.sum(val_col).alias("_bsum"))
+    offsets = block_sums.select(
+        "_blk",
+        F.coalesce(
+            F.sum("_bsum").over(
+                Window.orderBy("_blk").rowsBetween(
+                    Window.unboundedPreceding, -1
+                )
             ),
-        )
-        .persist()
+            F.lit(0),
+        ).alias("_voff"),
     )
-    _ROW_NUMBER_BARRIERS.append(local)
-    counts = local.groupBy("_gpid").agg(
-        F.count(F.lit(1)).alias("_cnt"),
-        F.sum(F.col(val_col)).alias("_vsum"),
-    )
-    wo = Window.orderBy("_gpid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = counts.select(
-        "_gpid",
-        F.coalesce(F.sum("_cnt").over(wo), F.lit(0)).alias("_off"),
-        F.coalesce(F.sum("_vsum").over(wo), F.lit(0)).alias("_voff"),
+    local_cum = F.sum(F.col(val_col)).over(
+        Window.partitionBy("_blk")
+        .orderBy(out_rank)
+        .rowsBetween(Window.unboundedPreceding, 0)
     )
     return (
-        local.join(F.broadcast(offsets), "_gpid")
-        .withColumn(out_rank, (F.col("_lrn") + F.col("_off")).cast("bigint"))
+        ranked.withColumn("_lcum", local_cum)
+        .join(F.broadcast(offsets), "_blk")
         .withColumn(out_cum, (F.col("_lcum") + F.col("_voff")).cast("bigint"))
-        .drop("_gpid", "_lrn", "_lcum", "_off", "_voff")
+        .drop("_blk", "_lcum", "_voff")
     )
 
 
@@ -2235,8 +1983,8 @@ def agg_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     the three quintile assignments MELT the customer frame into
     (metric_code, sort_value) rows — exactly 3N, one range shuffle —
     and compute each customer's exact per-metric rank with
-    `global_row_number` (range partition + per-partition offsets, all
-    windows keyed). NTILE(5)'s bucket arithmetic is then a pure
+    `global_row_number` (range partition + distributed sequence, no
+    window). NTILE(5)'s bucket arithmetic is then a pure
     per-row formula of (rank, N): the first N%5 buckets take
     ceil(N/5) rows, the rest floor(N/5) — bit-identical to the window
     NTILE both engines run, at any N. Buckets rejoin per customer via
@@ -2313,8 +2061,7 @@ def agg_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is pure arithmetic on (rank, N): q=N div 5, r=N mod 5, the first
     # r buckets take q+1 rows. greatest(q,1) keeps the (unreachable
     # when q=0) ELSE branch ANSI-safe. N comes from the helper's
-    # per-partition counts (melted total = 3N, read off the persisted
-    # barrier) — not from a third scan of orders.
+    # row count of the melted frame (3N).
     n_total = melt_total.select(
         F.expr("n_melted div 3").cast("bigint").alias("n_cust")
     )

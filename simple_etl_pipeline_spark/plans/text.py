@@ -4149,7 +4149,7 @@ def train_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents sequenced easy-first by (token count, doc_id) — the
     classic length-curriculum — with each document's exact global
     position assigned by the distributed `global_row_number` pattern
-    (plans/relational.py: range shuffle + per-partition offsets, no
+    (plans/relational.py: range shuffle + distributed sequence, no
     single-partition sort ANYWHERE — the same primitive the RFM
     rewrite introduced, exercised here on a second surface). The
     manifest rolls the sequence into CURRICULUM_SHARD-sized shards:
@@ -4244,9 +4244,8 @@ def train_token_budget_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plans/relational.py) — the prefix-sum sibling of the RFM/
     curriculum rank pattern and its FOURTH surface: an un-partitioned
     `SUM(tokens) OVER (ORDER BY quality DESC)` would serialize the
-    corpus through ONE reducer at 100 TB; the range-shuffle +
-    per-partition offsets form computes the identical value with
-    every window keyed.
+    corpus through ONE reducer at 100 TB; the rank-block form
+    computes the identical value with every data window keyed.
 
     Output: per-lang rollup of the SELECTED set — (lang, n_docs,
     n_tokens, min_quality_ppm, first_seq, last_seq, xor_ids) — which
@@ -4562,10 +4561,12 @@ def train_binpack_shelves(spark: SparkSession, sf_dir: str) -> DataFrame:
     `global_row_number` over the total order (band_len, doc_id) — its
     SIXTH surface — gives contiguous global ranks per band after ONE
     range shuffle, and the in-band rank is grank minus the band's
-    start offset, a <= 13-row aggregate read back off the primitive's
-    persist barrier and broadcast. Shelf manifest rows then come from
-    one (band, shelf)-keyed aggregation with map-side combine; output
-    rows = n_shelves ~ docs/slots (the manifest IS the product).
+    start offset, a <= 13-row aggregate over the ranked frame,
+    broadcast back (ranks are a pure function of the total order, so
+    the two readers of the ranked frame agree). Shelf manifest rows
+    then come from one (band, shelf)-keyed aggregation with map-side
+    combine; output rows = n_shelves ~ docs/slots (the manifest IS the
+    product).
     Oracle: identical arithmetic under ROW_NUMBER() OVER
     (PARTITION BY band ORDER BY doc_id) in DuckDB — the per-band rank
     equivalence is exactly what the subtract-offset trick guarantees.
@@ -4583,8 +4584,7 @@ def train_binpack_shelves(spark: SparkSession, sf_dir: str) -> DataFrame:
         "band_len", F.expr(_shelf_band_sql("n_tokens")).cast("bigint")
     )
     ranked = global_row_number(banded, ["band_len", "doc_id"], out="grank")
-    # per-band start offsets: <= 13 rows, read off the primitive's
-    # persist barrier (no second pass over the corpus), broadcast back
+    # per-band start offsets: <= 13 rows, broadcast back
     starts = ranked.groupBy("band_len").agg(
         (F.min("grank") - 1).alias("_start")
     )

@@ -221,9 +221,10 @@ def read_events(
 #     sim_knn_graph 1.32 vs 1.67, sim_knn_brute 0.49 vs 0.64 with vs
 #     without), as was documents (txt_dsir_weights 0.80 vs 1.66).
 # Round-robin repartition is safe here because nothing in the engine is
-# partition-dependent: no rand(), global ranks go through the
-# range-shuffle barrier (operators/relational.global_row_number), and
-# every collect_list is sort-normalized (the _ordered_vals discipline).
+# partition-dependent: no rand(), a global rank is a pure function of
+# its total order, whatever rows each partition holds
+# (plans/relational.global_row_number), and every collect_list is
+# sort-normalized (the _ordered_vals discipline).
 SMALL_SCAN_MIN_BYTES = 32 << 10
 SMALL_SCAN_MAX_BYTES = 256 << 20
 PARALLELIZE_SCAN_TABLES = frozenset({"documents", "embeddings"})

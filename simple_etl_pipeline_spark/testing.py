@@ -387,18 +387,6 @@ def compare_with_oracle(
     con = duckdb_connection(sf_dir)
     exp = con.execute(oracle_sql).fetchdf()
     got = spark_df.toPandas()
-    # The Spark side is fully materialized — release the
-    # global_row_number persist() barriers belonging to THIS frame
-    # (ADVICE r8: they otherwise live for the session, and the pytest
-    # session builds thousands of frames; ADVICE r9: the release must
-    # be per-frame so a barrier of some other built-but-not-yet-
-    # materialized frame keeps its persistence marker).
-    from simple_etl_pipeline_spark.plans.relational import (
-        release_barriers_for,
-    )
-
-    release_barriers_for(spark_df)
-
     exp_cols = sorted(exp.columns.tolist())
     got_cols = sorted(got.columns.tolist())
     # Explicit raises, not bare `assert` (the ADVICE-r10 class): this

@@ -900,187 +900,6 @@ def test_rfm_matches_oracle(spark, sf_dir):
     )
 
 
-def test_row_number_barrier_registry_drains(spark, sf_dir):
-    """ADVICE r8 (low): global_row_number persists its range-shuffle
-    barrier and the builder (lazy by contract) cannot unpersist it —
-    the registry is the fix. Pin the session-teardown contract: a
-    rank-bearing build registers >= 1 barrier,
-    release_row_number_barriers() unpersists them all and drains the
-    registry, and a repeat release is a 0-count no-op."""
-    from simple_etl_pipeline_spark.plans.relational import (
-        _ROW_NUMBER_BARRIERS,
-        agg_rfm_segments,
-        release_row_number_barriers,
-    )
-
-    release_row_number_barriers()  # clean slate from earlier tests
-    df = agg_rfm_segments(spark, sf_dir)
-    assert len(_ROW_NUMBER_BARRIERS) >= 1
-    df.count()  # materialize: barrier caches populate
-    assert release_row_number_barriers() >= 1
-    assert _ROW_NUMBER_BARRIERS == []
-    assert release_row_number_barriers() == 0
-
-
-def test_row_number_barrier_release_is_per_frame(spark, sf_dir):
-    """ADVICE r9 (medium): the old global release popped barriers of
-    OTHER frames that were built but not yet materialized — and
-    unpersist() removes the persistence marker for good (nothing
-    repopulates it), so that frame's window/counts branches would
-    later re-execute the range exchange independently. Pin the
-    per-frame contract: with two DIFFERENT rank-bearing frames
-    pending, release_barriers_for(B) unpersists only B's barrier; A's
-    stays registered AND keeps its persistence marker, so A still
-    materializes through one shared barrier; a final
-    release_barriers_for(A) then drains the registry."""
-    from pyspark.storagelevel import StorageLevel
-
-    from simple_etl_pipeline_spark.plans.relational import (
-        _ROW_NUMBER_BARRIERS,
-        agg_rfm_segments,
-        release_barriers_for,
-        release_row_number_barriers,
-    )
-    from simple_etl_pipeline_spark.plans.text import train_token_budget_pack
-
-    release_row_number_barriers()  # clean slate from earlier tests
-    df_a = agg_rfm_segments(spark, sf_dir)      # global_row_number user
-    n_a = len(_ROW_NUMBER_BARRIERS)
-    assert n_a >= 1
-    barriers_a = list(_ROW_NUMBER_BARRIERS)
-    df_b = train_token_budget_pack(spark, sf_dir)  # global_prefix_sum
-    assert len(_ROW_NUMBER_BARRIERS) > n_a
-    df_b.count()
-    released_b = release_barriers_for(df_b)
-    assert released_b >= 1
-    # A's barriers survived B's release: same objects, still marked
-    assert _ROW_NUMBER_BARRIERS == barriers_a
-    for b in barriers_a:
-        assert b.storageLevel != StorageLevel.NONE, (
-            "frame A's barrier lost its persistence marker — the exact"
-            " hazard the per-frame release exists to prevent"
-        )
-    df_a.count()  # A still materializes through its own barrier
-    assert release_barriers_for(df_a) >= n_a
-    assert _ROW_NUMBER_BARRIERS == []
-    # releasing for an unrelated frame is a no-op
-    assert release_barriers_for(df_b) == 0
-
-
-def test_row_number_ordinal_width_guard(spark):
-    """VERDICT r15 #4: global_row_number's local ordinal is MID's low
-    33 bits, which wrap SILENTLY at 2^33 rows per range partition —
-    reachable at 100 TB when a skewed key range concentrates ~8.6B
-    rows. The guard expression rides the existing |partitions|-row
-    offsets projection (zero extra jobs); pin both sides of it on
-    literal counts, since materializing 2^33 rows is not testable."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from simple_etl_pipeline_spark.plans.relational import (
-        _ordinal_width_guard,
-    )
-
-    one = spark.range(1)
-    # fits: contributes exactly 0 to the offset arithmetic
-    ok = one.select(
-        _ordinal_width_guard(F.lit(7), F.lit((1 << 33) - 1)).alias("g")
-    ).collect()
-    assert ok[0]["g"] == 0
-    # wraps: fails loudly, naming the partition and the remedy
-    with _pytest.raises(Exception) as exc:
-        one.select(
-            _ordinal_width_guard(F.lit(7), F.lit(1 << 33)).alias("g")
-        ).collect()
-    assert "2^33" in str(exc.value) and "num_partitions" in str(exc.value)
-
-
-def test_barrier_release_keeps_live_barrier_on_check_failure(
-    spark, sf_dir, monkeypatch
-):
-    """ADVICE r10 (low): a transient py4j/JVM failure during the
-    plan-containment check must NOT evict a live barrier — the old
-    `except: mine = True` would unpersist another pending frame's
-    barrier on a hiccup, reintroducing exactly the premature-unpersist
-    hazard the per-frame release exists to prevent. Pin: with the
-    containment check forced to raise and the session demonstrably
-    alive, release_barriers_for releases nothing and the registry is
-    untouched; a dead-session barrier (check forced True) IS evicted."""
-    from pyspark.storagelevel import StorageLevel
-
-    from simple_etl_pipeline_spark.plans import relational as rel
-
-    rel.release_row_number_barriers()  # clean slate
-    df = rel.agg_rfm_segments(spark, sf_dir)
-    assert len(rel._ROW_NUMBER_BARRIERS) >= 1
-    barriers = list(rel._ROW_NUMBER_BARRIERS)
-
-    def boom(parent, child):
-        raise RuntimeError("transient py4j failure")
-
-    monkeypatch.setattr(rel, "_plan_contains", boom)
-    # live session + failing check -> keep everything registered
-    assert rel.release_barriers_for(df) == 0
-    assert rel._ROW_NUMBER_BARRIERS == barriers
-    for b in barriers:
-        assert b.storageLevel != StorageLevel.NONE
-    # confirmed-dead session -> the eviction path still works
-    monkeypatch.setattr(rel, "_barrier_session_dead", lambda b: True)
-    assert rel.release_barriers_for(df) == len(barriers)
-    assert rel._ROW_NUMBER_BARRIERS == []
-    monkeypatch.undo()
-    df.count()  # frame still materializes (cache gone, plan intact)
-
-
-def test_barrier_release_evicts_undiagnosable_after_three_strikes(
-    spark, sf_dir, monkeypatch
-):
-    """ADVICE r11 (low): a barrier whose py4j gateway is entirely down
-    raises on EVERY liveness probe, so it can never be POSITIVELY
-    confirmed dead — under the r10 rule it stayed registered for the
-    process lifetime. Pin the bounded form: an UNDIAGNOSABLE barrier
-    (containment check raises AND the liveness probe raises) survives
-    the first _BARRIER_UNDIAG_EVICT_AFTER - 1 consecutive release
-    passes untouched, is evicted on the Nth, and any successful check
-    in between resets the strike counter — so transient hiccups on a
-    live barrier still never evict it (the r10 safety property)."""
-    from simple_etl_pipeline_spark.plans import relational as rel
-
-    rel.release_row_number_barriers()  # clean slate
-    df = rel.agg_rfm_segments(spark, sf_dir)
-    assert len(rel._ROW_NUMBER_BARRIERS) >= 1
-    barriers = list(rel._ROW_NUMBER_BARRIERS)
-    n = rel._BARRIER_UNDIAG_EVICT_AFTER
-    assert n >= 2  # a single hiccup must never evict
-
-    def boom(parent, child):
-        raise RuntimeError("transient py4j failure")
-
-    monkeypatch.setattr(rel, "_plan_contains", boom)
-    monkeypatch.setattr(rel, "_barrier_session_dead", lambda b: None)
-    # strikes 1 .. N-1: kept, registry untouched
-    for _ in range(n - 1):
-        assert rel.release_barriers_for(df) == 0
-        assert rel._ROW_NUMBER_BARRIERS == barriers
-    # a successful check in between resets the counter ...
-    monkeypatch.undo()
-    assert rel.release_barriers_for(spark.range(3)) == 0  # unrelated
-    assert rel._ROW_NUMBER_BARRIERS == barriers
-    for b in barriers:
-        assert getattr(b, "_graft_undiag_checks", 0) == 0
-    # ... so the next N-1 undiagnosable passes still keep it
-    monkeypatch.setattr(rel, "_plan_contains", boom)
-    monkeypatch.setattr(rel, "_barrier_session_dead", lambda b: None)
-    for _ in range(n - 1):
-        assert rel.release_barriers_for(df) == 0
-        assert rel._ROW_NUMBER_BARRIERS == barriers
-    # strike N: evicted anyway (best-effort unpersist still runs)
-    assert rel.release_barriers_for(df) == len(barriers)
-    assert rel._ROW_NUMBER_BARRIERS == []
-    monkeypatch.undo()
-    df.count()  # frame still materializes (cache gone, plan intact)
-
-
 def test_floor_div_helpers_reject_non_positive_divisor():
     """ADVICE r10 (low): the positive-divisor precondition must
     survive `python -O` (assert is stripped there) — the helpers are
@@ -2644,19 +2463,12 @@ def test_bm25_fuzzed_cross_engine(spark, sf_dir, tmp_path_factory, docs):
 # round-9-built r11 bank: token-budget pack, embargo split, seasonal
 # residuals, profile drift
 # =========================================================================
-def test_global_prefix_sum_equals_single_window(spark):
-    """The primitive contract: global_prefix_sum's (rank, cumsum)
-    must equal the single-partition `SUM(v) OVER (ORDER BY ...)` /
-    ROW_NUMBER() it replaces, under several partition counts — pinned
-    against a pandas cumsum over the same deterministic frame."""
+def _rank_rows():
+    """200 deterministic (id, key, v) rows and their pandas rank and
+    running sum under the (key, id) total order."""
     import hashlib
 
     import pandas as pd
-
-    from simple_etl_pipeline_spark.plans.relational import (
-        global_prefix_sum,
-        release_row_number_barriers,
-    )
 
     rows = [
         (i, int(hashlib.md5(f"k{i}".encode()).hexdigest()[:6], 16) % 97,
@@ -2667,6 +2479,36 @@ def test_global_prefix_sum_equals_single_window(spark):
     pdf = pdf.sort_values(["key", "id"]).reset_index(drop=True)
     pdf["rank"] = range(1, len(pdf) + 1)
     pdf["cum"] = pdf["v"].cumsum()
+    return rows, pdf
+
+
+@pytest.mark.parametrize("nparts", [1, 3, 32])
+def test_global_row_number_equals_single_window(spark, nparts):
+    """global_row_number's rank (and its total) must equal the
+    single-partition ROW_NUMBER() it replaces, under several range
+    partition counts."""
+    from simple_etl_pipeline_spark.plans.relational import global_row_number
+
+    rows, pdf = _rank_rows()
+    df = spark.createDataFrame(rows, "id long, key long, v long")
+    ranked, total = global_row_number(
+        df, ["key", "id"], out="rank", num_partitions=nparts, total_out="n"
+    )
+    got = ranked.select("id", "rank").orderBy("rank").collect()
+    assert [tuple(r) for r in got] == list(
+        map(tuple, pdf[["id", "rank"]].itertuples(index=False))
+    )
+    assert total.collect()[0]["n"] == len(rows)
+
+
+def test_global_prefix_sum_equals_single_window(spark):
+    """The primitive contract: global_prefix_sum's (rank, cumsum)
+    must equal the single-partition `SUM(v) OVER (ORDER BY ...)` /
+    ROW_NUMBER() it replaces, under several partition counts — pinned
+    against a pandas cumsum over the same deterministic frame."""
+    from simple_etl_pipeline_spark.plans.relational import global_prefix_sum
+
+    rows, pdf = _rank_rows()
     expected = list(map(tuple, pdf[["id", "rank", "cum"]].itertuples(index=False)))
     for nparts in (1, 3, 32):
         df = spark.createDataFrame(rows, "id long, key long, v long")
@@ -2680,7 +2522,28 @@ def test_global_prefix_sum_equals_single_window(spark):
             .collect()
         )
         assert [tuple(r) for r in got] == expected, f"nparts={nparts}"
-    release_row_number_barriers()
+
+
+def test_global_prefix_sum_across_many_blocks(spark, monkeypatch):
+    """With 7-row blocks the 200 ranks span 29 blocks, so the running
+    sum crosses block offsets, including a short last block."""
+    from simple_etl_pipeline_spark.plans import relational
+
+    monkeypatch.setattr(relational, "PREFIX_BLOCK_ROWS", 7)
+    rows, pdf = _rank_rows()
+    df = spark.createDataFrame(rows, "id long, key long, v long")
+    got = (
+        relational.global_prefix_sum(
+            df, ["key", "id"], "v",
+            out_rank="rank", out_cum="cum", num_partitions=3,
+        )
+        .select("id", "rank", "cum")
+        .orderBy("rank")
+        .collect()
+    )
+    assert [tuple(r) for r in got] == list(
+        map(tuple, pdf[["id", "rank", "cum"]].itertuples(index=False))
+    )
 
 
 def test_token_budget_pack_matches_oracle_and_greedy_boundary(spark, sf_dir):
@@ -4890,9 +4753,6 @@ def test_attention_pack_exact_manifest_on_edge_corpus(spark, tmp_path):
     parity on the same corpus."""
     import pyarrow as pa
 
-    from simple_etl_pipeline_spark.plans.relational import (
-        release_barriers_for,
-    )
     from simple_etl_pipeline_spark.plans.text import (
         ATTN_CTX,
         TRAIN_ATTENTION_PACK_ORACLE,
@@ -4927,7 +4787,6 @@ def test_attention_pack_exact_manifest_on_edge_corpus(spark, tmp_path):
     d = _edge_dir(tmp_path, "attn_edge", {"documents": tbl})
     df = train_attention_pack(spark, d)
     out = {r.seq_id: r for r in df.collect()}
-    release_barriers_for(df)
     assert sorted(out) == [0, 1, 2, 3]
     s0 = out[0]
     assert (s0.n_docs, s0.n_starts, s0.boundary_xor) == (1, 1, 0)
@@ -5241,9 +5100,6 @@ def test_attention_pack_fuzzed_cross_engine(
     = ctx, total packed tokens = the corpus total."""
     import pyarrow as pa
 
-    from simple_etl_pipeline_spark.plans.relational import (
-        release_barriers_for,
-    )
     from simple_etl_pipeline_spark.plans.text import (
         ATTN_CTX,
         TRAIN_ATTENTION_PACK_ORACLE,
@@ -5266,7 +5122,6 @@ def test_attention_pack_fuzzed_cross_engine(
     )
     df = train_attention_pack(spark, d)
     rows = df.collect()
-    release_barriers_for(df)
     total = sum(n for n in token_counts if n > 0)
     if total == 0:
         assert rows == []
@@ -5344,9 +5199,6 @@ def test_binpack_shelves_edge_corpus_band_boundaries_and_oversize(
     parity on the same corpus."""
     import pyarrow as pa
 
-    from simple_etl_pipeline_spark.plans.relational import (
-        release_barriers_for,
-    )
     from simple_etl_pipeline_spark.plans.text import (
         ATTN_CTX,
         TRAIN_BINPACK_SHELVES_ORACLE,
@@ -5378,7 +5230,6 @@ def test_binpack_shelves_edge_corpus_band_boundaries_and_oversize(
     d = _edge_dir(tmp_path, "shelf_edge", {"documents": tbl})
     df = train_binpack_shelves(spark, d)
     rows = df.collect()
-    release_barriers_for(df)
     got = {(r.band_len, r.shelf_id): r for r in rows}
     assert sorted(got) == [
         (0, 0), (0, 1), (1, 0), (2, 0), (4, 0), (16, 0), (32, 0),
@@ -5435,9 +5286,6 @@ def test_binpack_shelves_fuzzed_cross_engine(
     oversize total."""
     import pyarrow as pa
 
-    from simple_etl_pipeline_spark.plans.relational import (
-        release_barriers_for,
-    )
     from simple_etl_pipeline_spark.plans.text import (
         ATTN_CTX,
         TRAIN_BINPACK_SHELVES_ORACLE,
@@ -5460,7 +5308,6 @@ def test_binpack_shelves_fuzzed_cross_engine(
     )
     df = train_binpack_shelves(spark, d)
     rows = df.collect()
-    release_barriers_for(df)
     total = sum(n for n in token_counts if n > 0)
     assert sum(r.n_tokens for r in rows) == total
     by_band: dict = {}
@@ -5687,10 +5534,7 @@ def test_mad_outliers_edge_corpus_medians_degeneracy_and_cap(
         EV_MAD_OUTLIERS_ORACLE,
         ev_mad_outliers,
     )
-    from simple_etl_pipeline_spark.plans.relational import (
-        DQ_DELTA_CAP,
-        release_barriers_for,
-    )
+    from simple_etl_pipeline_spark.plans.relational import DQ_DELTA_CAP
     from simple_etl_pipeline_spark.testing import compare_with_oracle
 
     rows = [
@@ -5706,7 +5550,6 @@ def test_mad_outliers_edge_corpus_medians_degeneracy_and_cap(
     d = _edge_dir(tmp_path, "mad_edge", {"events": _events_tbl(rows)})
     df = ev_mad_outliers(spark, d)
     out = {r.event_type: r for r in df.collect()}
-    release_barriers_for(df)
     assert sorted(out) == ["(null)", "cap", "const7", "even", "odd"]
     o = out["odd"]
     assert (o.n_events, o.med_micros, o.mad_micros) == (3, 2_000_000, 1_000_000)
@@ -5848,9 +5691,6 @@ def test_bytes_shard_pack_edge_corpus_boundaries_and_gaps(
         SHARD_BYTES,
         mm_bytes_shard_pack,
     )
-    from simple_etl_pipeline_spark.plans.relational import (
-        release_barriers_for,
-    )
     from simple_etl_pipeline_spark.testing import compare_with_oracle
 
     assert SHARD_BYTES == 65536  # the arithmetic below is spelled for it
@@ -5876,7 +5716,6 @@ def test_bytes_shard_pack_edge_corpus_boundaries_and_gaps(
     d = _edge_dir(tmp_path, "shard_edge", {"documents": tbl})
     df = mm_bytes_shard_pack(spark, d)
     rows = {r.shard_id: r for r in df.collect()}
-    release_barriers_for(df)
     assert sorted(rows) == [0, 1, 4]
     s0 = rows[0]
     assert (s0.n_blobs, s0.n_bytes, s0.overflow_bytes) == (1, 65536, 0)
@@ -5910,9 +5749,6 @@ def test_bytes_shard_pack_fuzzed_cross_engine(
         MM_BYTES_SHARD_PACK_ORACLE,
         mm_bytes_shard_pack,
     )
-    from simple_etl_pipeline_spark.plans.relational import (
-        release_barriers_for,
-    )
     from simple_etl_pipeline_spark.testing import compare_with_oracle
 
     texts = ["x" * n for n in sizes]
@@ -5930,7 +5766,6 @@ def test_bytes_shard_pack_fuzzed_cross_engine(
     )
     df = mm_bytes_shard_pack(spark, d)
     rows = df.collect()
-    release_barriers_for(df)
     assert sum(r.n_bytes for r in rows) == sum(sizes)
     assert sum(r.n_blobs for r in rows) == len(sizes)
     compare_with_oracle(

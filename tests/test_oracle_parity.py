@@ -4,6 +4,8 @@ caught immediately."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 import __spark_entry__ as entrymod
@@ -36,6 +38,39 @@ def test_every_oracle_has_a_query():
 def test_query_matches_oracle(spark, sf_dir, name):
     df = QUERIES[name](spark, sf_dir)
     compare_with_oracle(df, ORACLES[name], sf_dir)
+
+
+# The registered queries whose result rests on global_row_number /
+# global_prefix_sum ranks.
+RANK_QUERIES = [
+    "agg_rfm_segments",
+    "ev_mad_outliers",
+    "ev_trimmed_mean",
+    "mm_bytes_shard_pack",
+    "train_attention_pack",
+    "train_binpack_shelves",
+    "train_curriculum_order",
+    "train_token_budget_pack",
+]
+SF001_DIR = "/root/testdata/sf0.01"
+
+
+@pytest.mark.parametrize("name", RANK_QUERIES)
+def test_rank_query_survives_cache_clear_before_action(spark, name):
+    """A rank in a total order is a pure function of the rows, so the
+    result may not depend on any cache: clearing the session cache
+    between build and action still matches the oracle (at the driver's
+    scale, where ranks span several range partitions), and the action
+    leaves no RDD persisted behind."""
+    if not os.path.isdir(SF001_DIR):
+        pytest.skip("sf0.01 testdata not present")
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    spark.catalog.clearCache()  # frames persisted by earlier tests
+    before = persistent().size()
+    df = QUERIES[name](spark, SF001_DIR)
+    spark.catalog.clearCache()
+    compare_with_oracle(df, ORACLES[name], SF001_DIR)
+    assert persistent().size() == before
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))

@@ -19,6 +19,45 @@ def _plan(spark, sf_dir, name) -> str:
     return QUERIES[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
 
 
+def _window_specs(df) -> list:
+    """(partition key names, window expressions) of every WindowExec in
+    the executed plan, through AQE and cache wrappers."""
+    from simple_etl_pipeline_spark.operators.planaudit import (
+        _children,
+        _name,
+        _seq,
+    )
+
+    out, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = _name(node)
+        if name == "WindowExec":
+            keys = {e.toString().split("#")[0] for e in _seq(node.partitionSpec())}
+            out.append((keys, node.windowExpression().toString()))
+        stack.extend(_children(node, name))
+    return out
+
+
+def _assert_sequence_ranks(df, range_col: str, bounded=()) -> str:
+    """The global_row_number shape: a range exchange on the total
+    order's leading column, Spark's distributed sequence numbering the
+    sorted partitions, no window keyed by a `bounded` (few-valued)
+    column, and no un-keyed window over data rows — the only un-keyed
+    window is global_prefix_sum's running sum over the <= N/2^20
+    block sums. Returns the plan text."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan
+    assert "ntile" not in plan, plan
+    assert f"Exchange rangepartitioning({range_col}" in plan, plan
+    assert "AttachDistributedSequence" in plan, plan
+    for keys, exprs in _window_specs(df):
+        assert not keys & set(bounded), (keys, exprs)
+        if not keys:
+            assert "sum(_bsum" in exprs, exprs
+    return plan
+
+
 def test_q6_filters_reach_scan(spark, sf_dir):
     plan = _plan(spark, sf_dir, "q6_revenue_filter")
     # range predicates reach the parquet scan (list may be truncated in
@@ -741,32 +780,15 @@ def test_gap_fill_single_data_shuffle_pruned_scan(spark, sf_dir):
 
 def test_rfm_no_global_window_keyed_shuffles_only(spark, sf_dir):
     """The VERDICT r7 #3 'Done' criterion: no single-partition window
-    over an unbounded frame. Every Window in the plan is either keyed
-    by a data column (_gpid / o_custkey) or runs over the
-    |partitions|-row offsets frame — the bounded metadata class."""
+    over an unbounded frame. The quintile ranks come from a RANGE
+    shuffle of the melted customer frame numbered by the distributed
+    sequence, not a global sort into one partition — no window is keyed
+    by the 3-valued metric code and no window NTILE survives."""
     from simple_etl_pipeline_spark.plans import relational as relmod
 
-    plan = (
-        relmod.agg_rfm_segments(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    plan = _assert_sequence_ranks(
+        relmod.agg_rfm_segments(spark, sf_dir), "mc", bounded=("mc",)
     )
-    assert "CartesianProduct" not in plan
-    # the quintile ranks come from a RANGE shuffle of the melted
-    # customer frame (behind the persisted barrier), not a global
-    # sort into one partition — and no window NTILE survives
-    assert "Exchange rangepartitioning(mc" in plan, plan
-    assert "InMemoryTableScan" in plan, plan  # the determinism barrier
-    assert "ntile" not in plan, plan
-    # every row_number window is keyed by _gpid (data-parallel); the
-    # only un-keyed windows are the running-sums over the
-    # |partitions|-row offsets frame (metadata class)
-    for ln in plan.splitlines():
-        if "row_number() windowspecdefinition" in ln:
-            assert "_gpid" in ln.split("windowspecdefinition")[1][:30], ln
-        elif "windowspecdefinition" in ln:
-            assert "sum(_cnt" in ln, ln
     # the as-of date + N are the adjudicated 1-row scalar broadcasts
     nljs = [ln for ln in plan.splitlines() if "BroadcastNestedLoopJoin" in ln]
     assert nljs and all("Cross" in ln for ln in nljs), plan
@@ -865,25 +887,13 @@ def test_basket_lift_single_shuffle_pairs_takeordered(spark, sf_dir):
 
 def test_curriculum_range_shuffle_keyed_windows_only(spark, sf_dir):
     """The curriculum sequence reuses global_row_number: range
-    exchange + _gpid-keyed row_number + persisted barrier; the shard
-    rollup is keyed. No single-partition data window, no ntile."""
+    exchange + distributed sequence; the shard rollup is keyed. No
+    single-partition data window, no ntile."""
     from simple_etl_pipeline_spark.plans import text as txtmod
 
-    plan = (
-        txtmod.train_curriculum_order(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    plan = _assert_sequence_ranks(
+        txtmod.train_curriculum_order(spark, sf_dir), "n_tokens"
     )
-    assert "CartesianProduct" not in plan
-    assert "Exchange rangepartitioning(n_tokens" in plan, plan
-    assert "InMemoryTableScan" in plan, plan
-    assert "ntile" not in plan, plan
-    for ln in plan.splitlines():
-        if "row_number() windowspecdefinition" in ln:
-            assert "_gpid" in ln.split("windowspecdefinition")[1][:30], ln
-        elif "windowspecdefinition" in ln:
-            assert "sum(_cnt" in ln, ln
     rs = plan.split("ReadSchema")[1][:200]
     assert "doc_id" in rs and "lang" not in rs, rs
 
@@ -1041,57 +1051,31 @@ def test_plan_fingerprint_is_build_order_invariant(spark, sf_dir):
 
 def test_trimmed_mean_range_shuffle_no_variant_window(spark, sf_dir):
     """The trim rank comes from global_row_number (range exchange +
-    _gpid-keyed row_number + persisted barrier) with variant LEADING
-    the total order — there must be NO window partitioned by variant
-    (2 partitions = 2 reducers at any scale) and no ntile; the final
-    variant joins are 2-row broadcasts."""
+    distributed sequence) with variant LEADING the total order — there
+    must be NO window partitioned by variant (2 partitions = 2 reducers
+    at any scale) and no ntile; the final variant joins are 2-row
+    broadcasts."""
     from simple_etl_pipeline_spark.plans import events as evmod
 
-    plan = (
-        evmod.ev_trimmed_mean(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    plan = _assert_sequence_ranks(
+        evmod.ev_trimmed_mean(spark, sf_dir), "variant", bounded=("variant",)
     )
-    assert "CartesianProduct" not in plan
-    assert "Exchange rangepartitioning(variant" in plan, plan
-    assert "InMemoryTableScan" in plan, plan
-    assert "ntile" not in plan, plan
-    for ln in plan.splitlines():
-        if "row_number() windowspecdefinition" in ln:
-            assert "_gpid" in ln.split("windowspecdefinition")[1][:30], ln
-        elif "windowspecdefinition" in ln:
-            assert "sum(_cnt" in ln, ln  # the metadata offsets window
     rs = plan.split("ReadSchema")[1][:200]
     assert "user_id" in rs and "event_type" not in rs, rs
 
 
 def test_token_budget_prefix_sum_barrier_shape(spark, sf_dir):
-    """The dedicated barrier-contract test the r8 ledger promised once
-    the range-shuffle primitive gained more surfaces: the token-budget
-    pack runs global_prefix_sum (4th surface family) — range exchange
-    on the (negq, doc_id) total order, the persisted barrier visible
-    as InMemoryTableScan to BOTH consuming branches (local windows +
-    per-partition counts), every windowspecdefinition keyed by _gpid
-    or over the metadata-sized counts frame, and no ntile / cartesian
-    / un-keyed data window anywhere."""
+    """The token-budget pack runs global_prefix_sum: range exchange on
+    the (negq, doc_id) total order numbered by the distributed
+    sequence, the running sum keyed by its rank block (_blk), the only
+    un-keyed window over the block sums, and no ntile / cartesian /
+    un-keyed data window anywhere. No cache carries the ranks."""
     from simple_etl_pipeline_spark.plans import text as txtmod
 
-    plan = (
-        txtmod.train_token_budget_pack(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    plan = _assert_sequence_ranks(
+        txtmod.train_token_budget_pack(spark, sf_dir), "negq"
     )
-    assert "CartesianProduct" not in plan
-    assert "Exchange rangepartitioning(negq" in plan, plan
-    assert plan.count("InMemoryTableScan") >= 2, plan  # both branches
-    assert "ntile" not in plan
-    for ln in plan.splitlines():
-        if "row_number() windowspecdefinition" in ln:
-            assert "_gpid" in ln.split("windowspecdefinition")[1][:30], ln
-        elif "sum(n_tokens" in ln and "windowspecdefinition" in ln:
-            assert "_gpid" in ln.split("windowspecdefinition")[1][:30], ln
+    assert "InMemoryTableScan" not in plan, plan
 
 
 def test_embargo_and_seasonal_bounded_broadcasts_only(spark, sf_dir):
@@ -1228,30 +1212,17 @@ def test_phash_hashing_is_columnar_band_join_is_equi(spark, sf_dir):
 def test_attention_pack_prefix_sum_barrier_and_bounded_explode(
     spark, sf_dir
 ):
-    """train_attention_pack (r13 bank) is global_prefix_sum's fifth
-    surface: range exchange on the doc_id total order, the persisted
-    barrier visible to both consuming branches, every window keyed by
-    _gpid or over the metadata-sized counts frame — and exactly ONE
+    """train_attention_pack is a global_prefix_sum surface: range
+    exchange on the doc_id total order numbered by the distributed
+    sequence, no un-keyed window over data rows — and exactly ONE
     generator (the span explode, whose output is manifest-sized:
     n_docs + tokens div ctx rows), never a cartesian product."""
     from simple_etl_pipeline_spark.plans import text as txtmod
 
-    plan = (
-        txtmod.train_attention_pack(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    plan = _assert_sequence_ranks(
+        txtmod.train_attention_pack(spark, sf_dir), "doc_id"
     )
-    assert "CartesianProduct" not in plan
-    assert "Exchange rangepartitioning(doc_id" in plan, plan
-    assert plan.count("InMemoryTableScan") >= 2, plan  # both branches
     assert plan.count("Generate explode") == 1, plan
-    assert "ntile" not in plan
-    for ln in plan.splitlines():
-        if "row_number() windowspecdefinition" in ln:
-            assert "_gpid" in ln.split("windowspecdefinition")[1][:30], ln
-        elif "sum(n_tokens" in ln and "windowspecdefinition" in ln:
-            assert "_gpid" in ln.split("windowspecdefinition")[1][:30], ln
 
 
 def test_embedding_drift_single_agg_pass_no_join_no_window(
@@ -1305,32 +1276,21 @@ def test_embedding_drift_single_agg_pass_no_join_no_window(
 def test_binpack_shelves_row_number_barrier_no_band_window(
     spark, sf_dir
 ):
-    """train_binpack_shelves (r14 bank) is global_row_number's sixth
-    surface, ranked over the (band_len, doc_id) total order: one range
-    exchange, the persisted barrier read by both consuming branches
-    (ranks and the <= 13-row band-offsets frame), every row_number
-    keyed by _gpid — NEVER a band-partitioned window, whose <= 13-key
-    universe would funnel the corpus through 13 reducers. The offsets
-    come back on broadcast joins and there is no generator at all (the
-    manifest is an aggregation, not an explode)."""
+    """train_binpack_shelves is a global_row_number surface, ranked
+    over the (band_len, doc_id) total order: one range exchange, the
+    distributed sequence — NEVER a band-partitioned window, whose
+    <= 13-key universe would funnel the corpus through 13 reducers. The
+    offsets come back on broadcast joins and there is no generator at
+    all (the manifest is an aggregation, not an explode)."""
     from simple_etl_pipeline_spark.plans import text as txtmod
 
-    plan = (
-        txtmod.train_binpack_shelves(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    plan = _assert_sequence_ranks(
+        txtmod.train_binpack_shelves(spark, sf_dir),
+        "band_len",
+        bounded=("band_len",),
     )
-    assert "CartesianProduct" not in plan
-    assert "Exchange rangepartitioning(band_len" in plan, plan
-    assert plan.count("InMemoryTableScan") >= 2, plan  # both branches
     assert "Generate" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
-    for ln in plan.splitlines():
-        if "row_number() windowspecdefinition" in ln:
-            assert "_gpid" in ln.split("windowspecdefinition")[1][:30], ln
-        if "windowspecdefinition(band_len" in ln:
-            raise AssertionError(f"band-partitioned window leaked: {ln}")
 
 
 def test_snapshot_diff_full_outer_equi_join_pruned_scans(
@@ -1368,28 +1328,19 @@ def test_snapshot_diff_full_outer_equi_join_pruned_scans(
 
 
 def test_mad_outliers_gpid_ranks_never_type_keyed_window(spark, sf_dir):
-    """ev_mad_outliers (r15 bank) ranks both passes through
-    global_row_number (7th/8th surfaces): two range exchanges, every
-    row_number keyed by _gpid, and NO window partitioned by the event
-    type — a |types|-key window would funnel the stream through a
-    handful of reducers. The per-type offset/median/MAD frames come
-    back as broadcast joins."""
+    """ev_mad_outliers ranks both passes through global_row_number: two
+    range exchanges, each numbered by the distributed sequence, and NO
+    window partitioned by the event type — a |types|-key window would
+    funnel the stream through a handful of reducers. The per-type
+    offset/median/MAD frames come back as broadcast joins."""
     from simple_etl_pipeline_spark.plans import events as evmod
 
-    plan = (
-        evmod.ev_mad_outliers(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    plan = _assert_sequence_ranks(
+        evmod.ev_mad_outliers(spark, sf_dir), "et", bounded=("et",)
     )
-    assert "CartesianProduct" not in plan
     assert plan.count("Exchange rangepartitioning(et") >= 2, plan
+    assert plan.count("AttachDistributedSequence") >= 2, plan
     assert "BroadcastHashJoin" in plan, plan
-    for ln in plan.splitlines():
-        if "row_number() windowspecdefinition" in ln:
-            assert "_gpid" in ln.split("windowspecdefinition")[1][:30], ln
-        if "windowspecdefinition(et" in ln:
-            raise AssertionError(f"type-keyed window leaked: {ln}")
 
 
 def test_knn_graph_bucket_equi_join_node_keyed_topk(spark, sf_dir):
@@ -1429,25 +1380,16 @@ def test_knn_graph_bucket_equi_join_node_keyed_topk(spark, sf_dir):
 
 
 def test_bytes_shard_pack_prefix_sum_barrier_no_generate(spark, sf_dir):
-    """mm_bytes_shard_pack (r15 bank) rides global_prefix_sum: one
-    range exchange on doc_id, the persisted barrier read by both
-    branches, pid-keyed windows only — and no generator at all (the
-    manifest is a shard-keyed aggregation, not an explode)."""
+    """mm_bytes_shard_pack rides global_prefix_sum: one range exchange
+    on doc_id numbered by the distributed sequence, block-keyed running
+    sums only — and no generator at all (the manifest is a shard-keyed
+    aggregation, not an explode)."""
     from simple_etl_pipeline_spark.plans import multimodal as mmmod
 
-    plan = (
-        mmmod.mm_bytes_shard_pack(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    plan = _assert_sequence_ranks(
+        mmmod.mm_bytes_shard_pack(spark, sf_dir), "doc_id"
     )
-    assert "CartesianProduct" not in plan
-    assert "Exchange rangepartitioning(doc_id" in plan, plan
-    assert plan.count("InMemoryTableScan") >= 2, plan
     assert "Generate" not in plan, plan
-    for ln in plan.splitlines():
-        if "row_number() windowspecdefinition" in ln:
-            assert "_gpid" in ln.split("windowspecdefinition")[1][:30], ln
 
 
 def test_knn_components_no_cartesian_no_python(spark, sf_dir):

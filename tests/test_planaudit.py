@@ -96,15 +96,12 @@ def test_bench_fp_residual_names_never_read_as_plan_changes():
     assert bench.fp_changed("q1_pricing_summary", "aaa", "bbb") is True
     assert bench.fp_changed("q1_pricing_summary", "aaa", "aaa") is False
     # every residual name justifies itself: the three documented
-    # multi-distinct plans, the r12 finding, or the r16 finding
-    # (txt_triangle_count's 380+-node formatted text flips between
-    # identical-code plan_dump runs — node counts identical)
+    # multi-distinct plans or the r12 finding
     assert bench.FP_RESIDUAL <= {
         "agg_approx_distinct",
         "agg_distinct_counts",
         "txt_dataset_card",
         "dq_profile_drift",
-        "txt_triangle_count",
     }
 
 
@@ -138,6 +135,33 @@ def test_scalar_bnlj_bound_accepts_literal_pk_filter(spark, sf_dir):
     corpus = emb.select(F.col("vec_id").alias("c_id2"))
     ok = audit_plan(corpus.crossJoin(F.broadcast(q)))
     assert ok.ok, ok.findings
+
+
+@pytest.mark.parametrize("eager", [False, True])
+def test_scalar_bnlj_bound_flags_checkpointed_data(spark, sf_dir, eager):
+    """A checkpointed frame is an RDD scan of data rows, not a driver
+    literal: its cross broadcast is flagged whether the checkpoint has
+    run (eager) or not."""
+    nation = load_table(spark, sf_dir, "nation")
+    orders = load_table(spark, sf_dir, "orders")
+    ckpt = orders.select("o_orderkey").localCheckpoint(eager=eager)
+    try:
+        audit = audit_plan(nation.crossJoin(F.broadcast(ckpt)))
+        assert any("not scalar-bounded" in f for f in audit.findings), (
+            audit.findings
+        )
+    finally:
+        ckpt._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def test_scalar_bnlj_bound_accepts_create_dataframe_literal(spark, sf_dir):
+    """A createDataFrame literal (driver rows, an RDD scan whose
+    lineage is a parallelized collection) broadcasts clean."""
+    nation = load_table(spark, sf_dir, "nation")
+    lit = spark.createDataFrame([(0.5,), (0.9,)], "p double")
+    assert "Scan ExistingRDD" in formatted_plan(nation.crossJoin(lit))
+    audit = audit_plan(nation.crossJoin(F.broadcast(lit)))
+    assert audit.ok, audit.findings
 
 
 def _rebuilt_after_collect(spark, sf_dir, build):

@@ -60,6 +60,9 @@ def main() -> None:
     out: dict[str, dict] = {}
     for name, fn in entrymod.queries().items():
         try:
+            # a fresh build: no cache left behind by an earlier query's
+            # build may substitute into this plan (plan_fingerprint)
+            spark.catalog.clearCache()
             df = fn(spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()
             out[name] = {

@@ -32,9 +32,6 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 from simple_etl_pipeline_spark.functions.text import tokens_col
-from simple_etl_pipeline_spark.plans.relational import (
-    release_barriers_for as _release_rank_barriers_for,
-)
 from simple_etl_pipeline_spark.schemas import load_table
 from simple_etl_pipeline_spark.session import get_spark
 
@@ -681,9 +678,6 @@ def main() -> None:
         for name in probe:
             wdf = queries[name](spark, warm)
             _force(wdf)
-            # per-frame release (ADVICE r9): drop only this build's
-            # global_row_number barriers
-            _release_rank_barriers_for(wdf)
         spark.catalog.clearCache()
         for k in ks:
             kdir = os.path.join(base, f"k{k}")
@@ -699,14 +693,6 @@ def main() -> None:
                 n_out = _force(kdf)
                 wall = time.perf_counter() - t0
                 results[name][k] = wall
-                # free the global_row_number/prefix_sum barriers THIS
-                # build persisted (the ADVICE-r8 leak, closed for bench
-                # and the oracle harness — the probe harness builds the
-                # same rank-bearing queries once per scale point and
-                # would otherwise accumulate growing cached range
-                # shuffles across K, distorting the exponents; ADVICE
-                # r9: released per-frame, other frames keep theirs)
-                _release_rank_barriers_for(kdf)
                 if name == "dedup_semdedup":
                     # evidence for the bounded-cell-width contract: the
                     # output carries (cell, bucket), so max width is one
