@@ -12,20 +12,20 @@ at 100 TB:
 - optionally: a filter actually pushed to the scan, a bounded number
   of shuffles, a scan pruned to an expected column count.
 
-The node-name and budget rules read the FORMATTED physical plan string
-— the same evidence PLANS.md records — so a finding cites the offending
-node verbatim. The nested-loop bound needs parent/child structure, so
-it walks the JVM SparkPlan tree instead, which holds the same on a
-fresh frame and on one whose plan (or a cached frame it reads) has
-already run. This runs at plan time (no job is executed) and costs
-milliseconds to a few hundred: the cheap pre-flight a scheduled 100 TB
-job wants, because the alternative is discovering the cartesian
-product three hours in.
+Every rule reads the JVM SparkPlan tree by node class, through one
+walk (:func:`plan_nodes`) that looks through AQE plans, query stages,
+cached relations, reused exchanges and subqueries, so a rule holds
+the same on a fresh frame and on one whose plan (or a cached frame it
+reads) has already run. This runs at plan time (no job is executed)
+and costs milliseconds to a few hundred: the cheap pre-flight a
+scheduled 100 TB job wants, because the alternative is discovering
+the cartesian product three hours in.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import Iterator
 
 from pyspark.sql import DataFrame
 
@@ -186,16 +186,40 @@ def _children(node, name: str) -> list:
     """The plan nodes under a physical plan node. The wrappers hold
     their plan outside ``children()``: an AQE plan its current plan, a
     query stage its stage plan, a cached-relation scan the cache's plan
-    and a reused exchange the exchange it reuses."""
+    and a reused exchange or subquery the one it reuses."""
     if name == "AdaptiveSparkPlanExec":
         return [node.executedPlan()]
     if name.endswith("QueryStageExec"):
         return [node.plan()]
     if name == "InMemoryTableScanExec":
         return [node.relation().cachedPlan()]
-    if name == "ReusedExchangeExec":
+    if name in ("ReusedExchangeExec", "ReusedSubqueryExec"):
         return [node.child()]
     return _seq(node.children())
+
+
+def plan_nodes(df: DataFrame) -> Iterator[tuple[str, object]]:
+    """Every node of a DataFrame's physical plan (``executedPlan()``)
+    as ``(class simple name, JVM node)``, each once. The walk looks
+    through AQE plans, query stages, cached relations (the cache's own
+    plan, executed or not), reused exchanges and subqueries (the reuse
+    source itself) and enters every node's ``subqueries()``, so it
+    reads a fresh frame and the same frame after its action alike. A
+    node reached by more than one path is yielded once."""
+    seen: set[int] = set()
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = _name(node)
+        # a query stage's id() is its stage number, not a plan id; the
+        # stage plan it wraps is visited (and deduplicated) next
+        if not name.endswith("QueryStageExec"):
+            if node.id() in seen:
+                continue
+            seen.add(node.id())
+        yield name, node
+        stack.extend(reversed(_seq(node.subqueries())))
+        stack.extend(reversed(_children(node, name)))
 
 
 def _attr_name(expr) -> str | None:
@@ -276,6 +300,16 @@ def _bound_violation(node) -> str | None:
         (node,) = _children(node, name)
 
 
+def _bnlj_violation(node) -> str | None:
+    """None if a BroadcastNestedLoopJoin broadcasts a provably
+    row-bounded frame, else the finding."""
+    right = node.buildSide().toString() == "BuildRight"
+    why = _bound_violation(node.right() if right else node.left())
+    if why is None:
+        return None
+    return f"BNLJ (plan id {node.id()}) build side not scalar-bounded: {why}"
+
+
 def scalar_bnlj_violations(df: DataFrame) -> list[str]:
     """Every BroadcastNestedLoopJoin in a DataFrame's physical plan must
     broadcast a provably row-bounded frame, so the repo's approved-BNLJ
@@ -297,35 +331,14 @@ def scalar_bnlj_violations(df: DataFrame) -> list[str]:
     Anything else — a keyed aggregate over a data-dependent domain, a
     Generate/Union/multiplying join inside the build subtree, a bare
     parquet scan — is reported. Returns one message per violating BNLJ
-    (empty == every nested-loop broadcast is row-bounded).
-
-    The audit walks the JVM SparkPlan tree (``executedPlan()``), not
-    explain text, so it reads fresh and executed frames alike: it looks
-    through AQE plans, query stages, cached relations (the cache's own
-    plan, executed or not) and reused exchanges (the reuse source
-    itself). A node reached by more than one path is audited once."""
-    out: list[str] = []
-    seen: set[int] = set()
-    stack = [df._jdf.queryExecution().executedPlan()]
-    while stack:
-        node = stack.pop()
-        name = _name(node)
-        # a query stage's id() is its stage number, not a plan id; the
-        # stage plan it wraps is visited (and deduplicated) next
-        if not name.endswith("QueryStageExec"):
-            if node.id() in seen:
-                continue
-            seen.add(node.id())
-        if name == "BroadcastNestedLoopJoinExec":
-            right = node.buildSide().toString() == "BuildRight"
-            why = _bound_violation(node.right() if right else node.left())
-            if why is not None:
-                out.append(
-                    f"BNLJ (plan id {node.id()}) build side not "
-                    f"scalar-bounded: {why}"
-                )
-        stack.extend(reversed(_children(node, name)))
-    return out
+    (empty == every nested-loop broadcast is row-bounded), subquery
+    plans included (:func:`plan_nodes`)."""
+    return [
+        why
+        for name, node in plan_nodes(df)
+        if name == "BroadcastNestedLoopJoinExec"
+        and (why := _bnlj_violation(node)) is not None
+    ]
 
 
 @dataclass
@@ -334,15 +347,10 @@ class PlanAudit:
     passed every enabled rule."""
 
     findings: list[str] = field(default_factory=list)
-    plan: str = ""
 
     @property
     def ok(self) -> bool:
         return not self.findings
-
-
-def _scan_read_schemas(plan: str) -> list[str]:
-    return [seg.splitlines()[0] for seg in plan.split("ReadSchema: ")[1:]]
 
 
 def audit_plan(
@@ -358,75 +366,60 @@ def audit_plan(
 
     Raises nothing — returns a :class:`PlanAudit`; callers gate with
     ``assert audit.ok, audit.findings`` (tests) or log the findings
-    (scheduled jobs). ``max_shuffles`` counts Exchange nodes in the
-    attributed plan tree; AQE may later coalesce them, so treat it as
-    an upper bound on planned shuffles, not runtime ones."""
-    plan = formatted_plan(df)
-    out = PlanAudit(plan=plan)
+    (scheduled jobs). ``max_shuffles`` counts the distinct shuffle
+    exchanges of the plan (a reused exchange counts once); AQE may
+    later coalesce them, so treat it as an upper bound on planned
+    shuffles, not runtime ones."""
+    by_class: dict[str, list] = {}
+    for name, node in plan_nodes(df):
+        by_class.setdefault(name, []).append(node)
+    out = PlanAudit()
 
     if forbid_cartesian:
-        if "CartesianProduct" in plan:
+        if "CartesianProductExec" in by_class:
             out.findings.append("CartesianProduct in plan")
+        bnljs = by_class.get("BroadcastNestedLoopJoinExec", [])
         # a BroadcastNestedLoopJoin that is not an audited Cross join
         # means a join condition failed to produce equi keys
-        bnlj = [
-            line
-            for line in plan.splitlines()
-            if "BroadcastNestedLoopJoin" in line and "Build" in line
-        ]
-        bad = [line for line in bnlj if "Cross" not in line]
+        bad = [j for j in bnljs if j.joinType().toString() != "Cross"]
         if bad:
             out.findings.append(
-                f"non-Cross BroadcastNestedLoopJoin: {bad[0].strip()}"
+                "non-Cross BroadcastNestedLoopJoin: "
+                f"{bad[0].joinType()} {bad[0].buildSide()} (plan id {bad[0].id()})"
             )
         # every surviving (Cross) BNLJ must broadcast a scalar-bounded
         # frame — the rule that keeps the approved-carrier count from
         # silently absorbing a non-scalar nested-loop join
-        out.findings.extend(scalar_bnlj_violations(df))
+        out.findings.extend(
+            why for why in map(_bnlj_violation, bnljs) if why is not None
+        )
 
-    if forbid_python_row_udf and "BatchEvalPython" in plan:
+    if forbid_python_row_udf and "BatchEvalPythonExec" in by_class:
         out.findings.append(
             "row-at-a-time Python UDF on the data path (BatchEvalPython); "
             "use a pandas_udf (ArrowEvalPython) or a Column expression"
         )
 
     if max_shuffles is not None:
-        n = sum(
-            1
-            for line in plan.splitlines()
-            if line.lstrip().startswith("Exchange")
-            or " Exchange " in f" {line.strip()} "
-        )
-        # the formatted tree lists each Exchange once in the summary
-        # tree and once in the detail section; count detail headers
-        n_detail = sum(
-            1
-            for line in plan.splitlines()
-            if line.startswith("(") and ") Exchange" in line
-        )
-        n = n_detail or n
+        n = len(by_class.get("ShuffleExchangeExec", []))
         if n > max_shuffles:
             out.findings.append(f"{n} shuffles > allowed {max_shuffles}")
 
+    scans = by_class.get("FileSourceScanExec", [])
     if require_pushed_filter:
-        # inspect EVERY scan's PushedFilters section (a multi-scan plan
-        # may push on any of them), mirroring _scan_read_schemas
-        pushed_lists = [
-            seg.split("]", 1)[0]
-            for seg in plan.split("PushedFilters: [")[1:]
-        ]
-        if not pushed_lists:
+        # a multi-scan plan may push on any of its scans
+        if not scans:
             out.findings.append("no PushedFilters section in any scan")
-        elif not any(p.strip() for p in pushed_lists):
+        elif all(s.metadata().apply("PushedFilters") == "[]" for s in scans):
             out.findings.append("no filter pushed to any scan")
 
     if max_scan_columns is not None:
-        for schema in _scan_read_schemas(plan):
-            ncols = schema.count(":")
-            if ncols > max_scan_columns:
+        for scan in scans:
+            schema = scan.requiredSchema()
+            if schema.size() > max_scan_columns:
                 out.findings.append(
-                    f"scan reads {ncols} columns > allowed "
-                    f"{max_scan_columns}: {schema[:120]}"
+                    f"scan reads {schema.size()} columns > allowed "
+                    f"{max_scan_columns}: {schema.catalogString()[:120]}"
                 )
 
     return out

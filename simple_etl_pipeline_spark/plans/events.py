@@ -242,16 +242,16 @@ def ev_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
         epoch_seconds(F.date_trunc("day", "ts")).alias("day_epoch"),
         "value",
     )
-    bucketed.createOrReplaceTempView("ev_buckets_mr")
     return spark.sql(
-        f"""
+        """
         SELECT hour_epoch, day_epoch,
                COUNT(*) AS n_events,
                CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
-        FROM ev_buckets_mr
+        FROM {t}
         GROUP BY GROUPING SETS ((hour_epoch, day_epoch), (day_epoch), ())
         ORDER BY day_epoch ASC NULLS FIRST, hour_epoch ASC NULLS FIRST
-        """
+        """,
+        t=bucketed,
     )
 
 

@@ -332,14 +332,14 @@ ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS via the SQL surface (also exercises
     spark.sql as an API entry point)."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_gs")
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders
-        FROM orders_gs
+        FROM {t}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
         ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST
-        """
+        """,
+        t=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -1866,7 +1866,6 @@ def global_row_number(
     sort_cols: list,
     out: str = "_rn",
     num_partitions: int | None = None,
-    total_out: str | None = None,
 ):
     """Exact 1-based global row number under a TOTAL order, without a
     single-partition window:
@@ -1890,22 +1889,18 @@ def global_row_number(
     reads the ranked frame) reproduces them exactly and the frame needs
     no persist and no release.
 
-    `total_out`, when given, also returns a 1-row frame with the row
-    count under that name (`df.agg(count)`). `sort_cols` must be a
-    total order (include a unique tiebreaker) and null placement must
-    be encoded explicitly (e.g. a null-flag column): range partitioning
-    and the local sort both use plain ascending order."""
+    `sort_cols` must be a total order (include a unique tiebreaker)
+    and null placement must be encoded explicitly (e.g. a null-flag
+    column): range partitioning and the local sort both use plain
+    ascending order."""
     n = num_partitions or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
-    ranked = (
+    return (
         df.repartitionByRange(n, *sort_cols)
         .sortWithinPartitions(*sort_cols)
         .withColumn(out, InternalFunction.distributed_sequence_id() + 1)
     )
-    if total_out is None:
-        return ranked
-    return ranked, df.agg(F.count(F.lit(1)).alias(total_out))
 
 
 def global_prefix_sum(
@@ -1979,7 +1974,8 @@ def agg_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape (the VERDICT r7 #3 fix — no global un-partitioned
     NTILE anywhere): one o_custkey-keyed aggregation of orders
-    (map-side combined); the as-of date is a 1-row scalar broadcast;
+    (map-side combined); the as-of date and N are one 1-row scalar
+    broadcast aggregated from it;
     the three quintile assignments MELT the customer frame into
     (metric_code, sort_value) rows — exactly 3N, one range shuffle —
     and compute each customer's exact per-metric rank with
@@ -2004,23 +2000,30 @@ def agg_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("f"),
         F.sum(F.col("v_micros").cast("decimal(38,0)")).alias("m_micros"),
     )
-    asof = orders.agg(
-        F.max(epoch_seconds(F.col("o_orderdate"))).alias("asof_ep")
+    # The as-of date (the max of the per-customer maxima) and N come
+    # from one 1-row aggregate of per_cust, so orders is aggregated
+    # once; n_cust rides through the melt to the bucket arithmetic.
+    scalars = per_cust.agg(
+        F.max("last_ep").alias("asof_ep"),
+        F.count(F.lit(1)).alias("n_cust"),
     )
-    rfm = per_cust.crossJoin(F.broadcast(asof)).select(
+    rfm = per_cust.crossJoin(F.broadcast(scalars)).select(
         "o_custkey",
         F.expr("(asof_ep - last_ep) div 86400").alias("r_days"),
         "f",
         "m_micros",
+        "n_cust",
     )
     # Melt: metric code 0=R (asc), 1=F (desc via negation), 2=M (desc
     # via negation, NULL last via the null flag). All sort values fit
-    # decimal(38,0) exactly; f/m ride along so no join-back is needed.
+    # decimal(38,0) exactly; f/m/n_cust ride along so no join-back is
+    # needed.
     dec = "decimal(38,0)"
     melted = rfm.select(
         "o_custkey",
         "f",
         "m_micros",
+        "n_cust",
         F.explode(
             F.array(
                 F.struct(
@@ -2046,27 +2049,21 @@ def agg_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         "f",
         "m_micros",
+        "n_cust",
         "x.mc",
         "x.null_last",
         F.coalesce("x.sv", F.lit(0).cast(dec)).alias("sv"),
     )
-    ranked, melt_total = global_row_number(
-        melted,
-        ["mc", "null_last", "sv", "o_custkey"],
-        out="grn",
-        total_out="n_melted",
+    ranked = global_row_number(
+        melted, ["mc", "null_last", "sv", "o_custkey"], out="grn"
     )
     # Each metric block holds exactly N rows (every customer melts into
     # all three), so per-metric rank = global rn - mc*N, and NTILE(5)
     # is pure arithmetic on (rank, N): q=N div 5, r=N mod 5, the first
     # r buckets take q+1 rows. greatest(q,1) keeps the (unreachable
-    # when q=0) ELSE branch ANSI-safe. N comes from the helper's
-    # row count of the melted frame (3N).
-    n_total = melt_total.select(
-        F.expr("n_melted div 3").cast("bigint").alias("n_cust")
-    )
+    # when q=0) ELSE branch ANSI-safe.
     scored = (
-        ranked.crossJoin(F.broadcast(n_total))
+        ranked
         .withColumn("mrank", F.col("grn") - F.col("mc") * F.col("n_cust"))
         .withColumn(
             "bucket",

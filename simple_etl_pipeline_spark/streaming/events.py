@@ -124,9 +124,13 @@ def _run_to_memory(
     result: DataFrame, mode: str, checkpoint: str | None = None
 ) -> DataFrame:
     """Run a streaming result to a memory sink (AvailableNow) and
-    return the sink table. Failure contract: raises StreamRunError
-    with the root cause surfaced compactly (q.exception() preferred —
-    it carries the driver-side cause chain). When no caller-owned
+    return the sink table. The sink's temp view is dropped before
+    this returns: the frame holds the sink itself, so it still reads,
+    and a build leaves the session catalog as it found it.
+
+    Failure contract: raises StreamRunError with the root cause
+    surfaced compactly (q.exception() preferred — it carries the
+    driver-side cause chain). When no caller-owned
     checkpoint is involved, retries ONCE on a failed attempt: the
     memory sink name and implicit checkpoint are fresh per attempt,
     so the retry is correctness-neutral; callers that pass a
@@ -151,7 +155,9 @@ def _run_to_memory(
         try:
             q = w.outputMode(mode).trigger(availableNow=True).start()
             q.awaitTermination()
-            return result.sparkSession.table(name)
+            sunk = result.sparkSession.table(name)
+            result.sparkSession.catalog.dropTempView(name)
+            return sunk
         except Exception as exc:  # noqa: BLE001 — re-raised compacted
             cause = None
             if q is not None:

@@ -4,8 +4,9 @@ Built-in windows cover time bucketing; arbitrary per-key state (running
 counters, ML feature accumulators, custom session logic) needs
 applyInPandasWithState: the runtime shuffles rows by key, hands each
 key's micro-batch to pandas with a persistent state handle, and the
-state store checkpoints it. State per key here is 16 bytes — at 100 TB
-/day the store holds |users| entries, independent of stream length.
+state store checkpoints it. State per user here is 16 bytes, packed
+into per-bucket arrays — at 100 TB/day the store holds |users|
+entries, independent of stream length.
 
 The operator emits cumulative (n_events, sum_value) per user each
 micro-batch; the final per-user row equals the batch aggregate, which
@@ -28,8 +29,22 @@ OUTPUT_SCHEMA = T.StructType(
         T.StructField("sum_value", T.DoubleType()),
     ]
 )
-STATE_SCHEMA = T.StructType(
-    [T.StructField("n", T.LongType()), T.StructField("s", T.DoubleType())]
+# applyInPandasWithState pays one Python/Arrow round-trip per KEY
+# present per micro-batch (measured: exponent 0.95 under a worst-case
+# replay where every key recurs every batch — SCALING.md). Users are
+# therefore bucketed into N_STATE_BUCKETS state groups: the runtime
+# makes one Python call per BUCKET per batch, and the function fans
+# out to its users in pandas. State per bucket is three parallel
+# arrays (user, n, sum) — 16 B/user, packed; output rows cover only
+# the users touched in the batch, so update-mode semantics are exact.
+N_STATE_BUCKETS = 64
+
+BUCKET_STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("users", T.ArrayType(T.LongType())),
+        T.StructField("ns", T.ArrayType(T.LongType())),
+        T.StructField("ss", T.ArrayType(T.DoubleType())),
+    ]
 )
 
 
@@ -37,7 +52,7 @@ def user_totals_stateful(stream: DataFrame) -> DataFrame:
     # Defined nested so cloudpickle ships it BY VALUE: executors then
     # need no import of this package, which keeps the operator working
     # under harness sessions whose workers lack our PYTHONPATH.
-    def _update_user_totals(
+    def _update_bucket(
         key: tuple, pdfs: Iterator["pd.DataFrame"], state: GroupState
     ) -> Iterator["pd.DataFrame"]:
         import itertools
@@ -45,26 +60,45 @@ def user_totals_stateful(stream: DataFrame) -> DataFrame:
 
         import pandas as pd
 
-        (user_id,) = key
-        n, s = state.get if state.exists else (0, 0.0)
-        # Buffer ALL chunks, then ONE fsum + ONE += per batch: fsum is
-        # exactly rounded and order-independent, so the result does not
-        # depend on Arrow chunk boundaries — this is what makes the
-        # bucketed twin bit-equal (ADVICE r5: per-chunk fsum with +=
-        # rounds at every chunk boundary, and boundaries differ between
-        # per-key and per-bucket grouping).
-        chunks = [pdf["value"].to_numpy() for pdf in pdfs]
-        n += sum(len(c) for c in chunks)
-        s += math.fsum(itertools.chain.from_iterable(chunks))
-        state.update((n, s))
+        users, ns, ss = state.get if state.exists else ([], [], [])
+        users, ns, ss = list(users), list(ns), list(ss)
+        idx = {u: i for i, u in enumerate(users)}
+        # Buffer each user's values ACROSS chunks, then one fsum + one
+        # += per (user, batch): fsum is exactly rounded and
+        # order-independent, so the totals do not depend on how Arrow
+        # chunked the batch.
+        buf: dict[int, list] = {}
+        for pdf in pdfs:
+            for u, g in pdf.groupby("user_id", sort=True):
+                buf.setdefault(int(u), []).append(g["value"].to_numpy())
+        touched: dict[int, int] = {}
+        for u, chunks in buf.items():
+            i = idx.get(u)
+            if i is None:
+                i = len(users)
+                idx[u] = i
+                users.append(u)
+                ns.append(0)
+                ss.append(0.0)
+            ns[i] += sum(len(c) for c in chunks)
+            ss[i] += math.fsum(itertools.chain.from_iterable(chunks))
+            touched[u] = i
+        state.update((users, ns, ss))
         yield pd.DataFrame(
-            {"user_id": [user_id], "n_events": [n], "sum_value": [s]}
+            {
+                "user_id": [users[i] for i in touched.values()],
+                "n_events": [ns[i] for i in touched.values()],
+                "sum_value": [ss[i] for i in touched.values()],
+            }
         )
 
-    return stream.groupBy("user_id").applyInPandasWithState(
-        _update_user_totals,
+    keyed = stream.withColumn(
+        "bucket", F.pmod(F.col("user_id"), F.lit(N_STATE_BUCKETS))
+    )
+    return keyed.groupBy("bucket").applyInPandasWithState(
+        _update_bucket,
         outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
+        stateStructType=BUCKET_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -99,106 +133,6 @@ FROM events GROUP BY user_id ORDER BY user_id
 """
 
 
-# --- key-bucketed state: the per-key-overhead amortization --------------
-# applyInPandasWithState pays one Python/Arrow round-trip per KEY
-# present per micro-batch (measured: exponent 0.95 under a worst-case
-# replay where every key recurs every batch — SCALING.md). Bucketing
-# users into N_STATE_BUCKETS state groups amortizes that: the runtime
-# makes one Python call per BUCKET per batch, and the function fans
-# out to its users in pandas. State per bucket is three parallel
-# arrays (user, n, sum) — same 16 B/user as the per-key layout, just
-# packed; output rows cover only the users touched in the batch, so
-# update-mode semantics are preserved exactly.
-N_STATE_BUCKETS = 64
-
-BUCKET_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("users", T.ArrayType(T.LongType())),
-        T.StructField("ns", T.ArrayType(T.LongType())),
-        T.StructField("ss", T.ArrayType(T.DoubleType())),
-    ]
-)
-
-
-def user_totals_bucketed(
-    stream: DataFrame, n_buckets: int = N_STATE_BUCKETS
-) -> DataFrame:
-    # nested for cloudpickle by-value shipping (see user_totals_stateful)
-    def _update_bucket(
-        key: tuple, pdfs: Iterator["pd.DataFrame"], state: GroupState
-    ) -> Iterator["pd.DataFrame"]:
-        import itertools
-        import math
-
-        import pandas as pd
-
-        users, ns, ss = state.get if state.exists else ([], [], [])
-        users, ns, ss = list(users), list(ns), list(ss)
-        idx = {u: i for i, u in enumerate(users)}
-        # Buffer each user's values ACROSS chunks, then one fsum + one
-        # += per (user, batch) — identical accumulation to the per-key
-        # operator regardless of how Arrow chunked either grouping, so
-        # the outputs are bit-equal (fsum is exactly rounded and
-        # order-independent; only the += boundaries could differ, and
-        # now both operators have exactly one per batch).
-        buf: dict[int, list] = {}
-        for pdf in pdfs:
-            for u, g in pdf.groupby("user_id", sort=True):
-                buf.setdefault(int(u), []).append(g["value"].to_numpy())
-        touched: dict[int, int] = {}
-        for u, chunks in buf.items():
-            i = idx.get(u)
-            if i is None:
-                i = len(users)
-                idx[u] = i
-                users.append(u)
-                ns.append(0)
-                ss.append(0.0)
-            ns[i] += sum(len(c) for c in chunks)
-            ss[i] += math.fsum(itertools.chain.from_iterable(chunks))
-            touched[u] = i
-        state.update((users, ns, ss))
-        yield pd.DataFrame(
-            {
-                "user_id": [users[i] for i in touched.values()],
-                "n_events": [ns[i] for i in touched.values()],
-                "sum_value": [ss[i] for i in touched.values()],
-            }
-        )
-
-    keyed = stream.withColumn(
-        "bucket", F.pmod(F.col("user_id"), F.lit(n_buckets))
-    )
-    return keyed.groupBy("bucket").applyInPandasWithState(
-        _update_bucket,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=BUCKET_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def st_user_totals_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adapter twin of st_user_totals_stateful over the bucketed-state
-    operator — pytest-pinned equal to the per-key variant and to the
-    DuckDB oracle (not registered: it exists as the documented scale
-    path for the per-key operator's replay cost model)."""
-    from simple_etl_pipeline_spark.streaming.events import (
-        _run_to_memory,
-        read_events_stream,
-    )
-
-    stream = read_events_stream(spark, sf_dir)
-    out = _run_to_memory(user_totals_bucketed(stream), "update")
-    return (
-        out.groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.round(F.max("sum_value"), 4).alias("sum_value"),
-        )
-        .orderBy("user_id")
-    )
-
 SCD2_OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -212,7 +146,7 @@ SCD2_OUTPUT_SCHEMA = T.StructType(
 
 # Watermark-ordered SCD2 state, keyed by user BUCKET (pmod(user_id, N))
 # rather than user: one Python/Arrow round-trip per bucket per batch
-# instead of per key per batch — the amortization user_totals_bucketed
+# instead of per key per batch — the amortization user_totals_stateful
 # measured (the per-key layout probed at exponent 1.05 under 1-file
 # triggers: |touched keys| x batches invocations). Per bucket the state
 # holds (a) the OPEN dimension row of every seen user (the machine
@@ -621,7 +555,7 @@ ORDER BY user_id, version
 
 
 # --- incremental streaming MinHash-LSH index (round-13 prebuild bank) ----
-# Key-bucketed state (the user_totals_bucketed amortization, applied at
+# Key-bucketed state (the user_totals_stateful amortization, applied at
 # build time because the K=1->64 probe MEASURED the need): a naive
 # per-(band,bkey) grouping pays one Python/Arrow round-trip per OCCUPIED
 # BUCKET per micro-batch — ~4 x |docs| buckets of 1-3 rows each, and the

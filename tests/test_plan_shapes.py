@@ -21,21 +21,18 @@ def _plan(spark, sf_dir, name) -> str:
 
 def _window_specs(df) -> list:
     """(partition key names, window expressions) of every WindowExec in
-    the executed plan, through AQE and cache wrappers."""
-    from simple_etl_pipeline_spark.operators.planaudit import (
-        _children,
-        _name,
-        _seq,
-    )
+    the physical plan, through AQE and cache wrappers."""
+    from simple_etl_pipeline_spark.operators.planaudit import plan_nodes
 
-    out, stack = [], [df._jdf.queryExecution().executedPlan()]
-    while stack:
-        node = stack.pop()
-        name = _name(node)
+    out = []
+    for name, node in plan_nodes(df):
         if name == "WindowExec":
-            keys = {e.toString().split("#")[0] for e in _seq(node.partitionSpec())}
+            spec = node.partitionSpec()
+            keys = {
+                spec.apply(i).toString().split("#")[0]
+                for i in range(spec.size())
+            }
             out.append((keys, node.windowExpression().toString()))
-        stack.extend(_children(node, name))
     return out
 
 

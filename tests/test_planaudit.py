@@ -261,3 +261,105 @@ def test_scalar_bnlj_k_bounded_key_exemption(spark, sf_dir, tmp_path):
     assert audit("c_id").ok, audit("c_id").findings
     flagged = audit("user_id").findings
     assert len(flagged) == 1 and "keyed aggregate" in flagged[0], flagged
+
+
+def _frame(spark, sf_dir, case: str):
+    nation = load_table(spark, sf_dir, "nation")
+    orders = load_table(spark, sf_dir, "orders")
+    if case == "shuffles":
+        li = load_table(spark, sf_dir, "lineitem")
+        return li.join(orders, li.l_orderkey == orders.o_orderkey).groupBy(
+            "o_custkey"
+        ).agg(F.count(F.lit(1)).alias("n"))
+    if case == "cartesian":
+        return nation.crossJoin(load_table(spark, sf_dir, "region"))
+    if case == "non_cross_bnlj":
+        region = load_table(spark, sf_dir, "region")
+        return nation.join(
+            F.broadcast(region), nation.n_regionkey < region.r_regionkey
+        )
+    if case == "unbounded_bnlj":
+        return nation.crossJoin(F.broadcast(orders.select("o_orderkey")))
+    if case == "row_udf":
+        from pyspark.sql.functions import udf
+
+        upper = udf(lambda s: (s or "").upper(), "string")
+        return nation.select(upper("n_name").alias("u"))
+    assert case == "scan", case
+    return orders.filter(F.col("o_totalprice") > 1000).select(
+        "o_orderkey", "o_custkey"
+    )
+
+
+@pytest.mark.parametrize(
+    "case, rules, ok",
+    [
+        ("shuffles", {"max_shuffles": 1}, True),
+        ("shuffles", {"max_shuffles": 0}, False),
+        ("cartesian", {}, False),
+        ("non_cross_bnlj", {}, False),
+        ("unbounded_bnlj", {}, False),
+        ("row_udf", {}, False),
+        ("scan", {"require_pushed_filter": True, "max_scan_columns": 3}, True),
+        ("scan", {"max_scan_columns": 2}, False),
+    ],
+)
+def test_audit_reads_fresh_and_executed_frames_alike(
+    spark, sf_dir, case, rules, ok
+):
+    """Every rule gives the same findings on a fresh frame and on the
+    same frame after its action: the executed AQE plan (final stages
+    over the initial plan) is audited as planned, not once per
+    section of its explain text."""
+    import re
+
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        if case == "cartesian":
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        df = _frame(spark, sf_dir, case)
+        fresh = audit_plan(df, **rules).findings
+        df.collect()
+        executed = audit_plan(df, **rules).findings
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert (not fresh) == ok, fresh
+    # AQE re-plans the unexecuted parts of a plan: node ids may change
+    def ids(fs):
+        return [re.sub(r"plan id \d+", "plan id", f) for f in fs]
+
+    assert ids(executed) == ids(fresh)
+
+
+def test_scalar_bnlj_audit_enters_scalar_subqueries(spark, sf_dir):
+    """A nested-loop join that broadcasts data rows inside a scalar
+    subquery is flagged like the same join at the top level."""
+    nation = load_table(spark, sf_dir, "nation")
+    orders = load_table(spark, sf_dir, "orders")
+    sub = nation.crossJoin(F.broadcast(orders.select("o_orderkey"))).agg(
+        F.max("o_orderkey")
+    )
+    df = nation.filter(F.col("n_nationkey") < sub.scalar())
+    v = scalar_bnlj_violations(df)
+    assert len(v) == 1 and "not scalar-bounded" in v[0], v
+    audit = audit_plan(df)
+    assert any("not scalar-bounded" in f for f in audit.findings), (
+        audit.findings
+    )
+
+
+def test_row_udf_inside_scalar_subquery_is_flagged(spark, sf_dir):
+    """A row-at-a-time Python UDF in a scalar subquery is on the data
+    path too: flagged on the fresh frame and after its action."""
+    from pyspark.sql.functions import udf
+
+    nation = load_table(spark, sf_dir, "nation")
+    key = udf(lambda k: k, "long")
+    sub = nation.select(key("n_nationkey").alias("k")).agg(F.max("k"))
+    df = nation.filter(F.col("n_nationkey") < sub.scalar())
+    for _ in range(2):
+        audit = audit_plan(df)
+        assert any("BatchEvalPython" in f for f in audit.findings), (
+            audit.findings
+        )
+        df.collect()

@@ -202,28 +202,37 @@ def test_stateful_registration_is_host_independent():
     assert set(stateful.ORACLES) == set(stateful.QUERIES)
 
 
-def test_bucketed_state_equals_per_key_and_oracle(spark, sf_dir):
-    """user_totals_bucketed (one Python call per 64-user bucket per
-    batch) must produce exactly the per-key operator's totals and
-    match the DuckDB oracle — proving the amortization is a pure
-    cost-model change, not a semantics change."""
+def test_user_totals_stateful_equals_oracle(spark, sf_dir):
+    """The bucketed-state operator (one Python call per 64-user bucket
+    per batch) produces the per-user totals of the DuckDB oracle."""
     from simple_etl_pipeline_spark.streaming.stateful import (
         ST_USER_TOTALS_ORACLE,
-        st_user_totals_bucketed,
         st_user_totals_stateful,
     )
     from simple_etl_pipeline_spark.testing import compare_with_oracle
 
-    bucketed = st_user_totals_bucketed(spark, sf_dir)
-    compare_with_oracle(bucketed, ST_USER_TOTALS_ORACLE, sf_dir)
-    per_key = {
-        r.user_id: (r.n_events, r.sum_value)
-        for r in st_user_totals_stateful(spark, sf_dir).collect()
-    }
-    got = {
-        r.user_id: (r.n_events, r.sum_value) for r in bucketed.collect()
-    }
-    assert got == per_key
+    compare_with_oracle(
+        st_user_totals_stateful(spark, sf_dir), ST_USER_TOTALS_ORACLE, sf_dir
+    )
+
+
+@pytest.mark.parametrize(
+    "name", ["agg_grouping_sets", "ev_rollup_multires", "st_tumbling_hourly"]
+)
+def test_builds_leave_no_temp_views(spark, sf_dir, name):
+    """Building and collecting a query registers nothing in the session
+    catalog: SQL-surface queries pass their frame as a parameter and a
+    stream's memory-sink view is dropped once its frame is taken. A
+    fresh session starts with an empty catalog of temp views."""
+    import __spark_entry__ as entrymod
+
+    from simple_etl_pipeline_spark.testing import compare_with_oracle
+
+    session = spark.newSession()
+    before = session.catalog.listTables()
+    df = entrymod.queries()[name](session, sf_dir)
+    compare_with_oracle(df, entrymod.oracle_sql()[name], sf_dir)
+    assert session.catalog.listTables() == before
 
 
 # --- watermark-ordered SCD2 (round-6 rework) ------------------------------
